@@ -31,8 +31,3 @@ def phash60(*cols: Column | str) -> Column:
     """
     joined = F.concat_ws("|", *[F.col(c) if isinstance(c, str) else c for c in cols])
     return F.conv(F.substring(F.md5(joined), 1, 15), 16, 10).cast("long")
-
-
-def phash60_sql(expr: str) -> str:
-    """The DuckDB-side rendering of phash60 over a SQL string expression."""
-    return f"('0x' || substr(md5({expr}), 1, 15))::BIGINT"

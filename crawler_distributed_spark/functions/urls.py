@@ -339,21 +339,6 @@ def canonicalize_udf(s: pd.Series) -> pd.Series:
     return _canon_series(s)
 
 
-@F.pandas_udf(T.StringType())
-def fingerprint_udf(s: pd.Series) -> pd.Series:
-    return s.fillna("").map(url_fingerprint)
-
-
-@F.pandas_udf(T.StringType())
-def host_udf(s: pd.Series) -> pd.Series:
-    # vectorized host extraction: strip scheme, cut at first /?#, drop
-    # default port, lowercase
-    h = s.fillna("").str.replace(r"^[a-zA-Z][a-zA-Z0-9+.-]*://", "", regex=True)
-    h = h.str.split(r"[/?#]", n=1, regex=True).str[0].str.lower()
-    h = h.str.replace(r":(80|443)$", "", regex=True)
-    return h
-
-
 # ---------------------------------------------------------------------------
 # Spark side: Column-expression admission filters (codegen'd, no Python)
 # ---------------------------------------------------------------------------
@@ -413,12 +398,3 @@ def host_col(url: Column) -> Column:
     h = F.regexp_replace(url, r"^[a-zA-Z][a-zA-Z0-9+.-]*://", "")
     h = F.lower(F.regexp_extract(h, r"^([^/?#]*)", 1))
     return F.regexp_replace(h, r":(80|443)$", "")
-
-
-def in_scope_col(host: Column, domain: Column) -> Column:
-    """F4: domain scoping — host equals domain or its www-variant."""
-    www = F.concat(F.lit("www."), domain)
-    bare = F.when(domain.startswith("www."), F.expr("substring(domain, 5)")).otherwise(
-        domain
-    )
-    return (host == domain) | (host == www) | (host == bare)

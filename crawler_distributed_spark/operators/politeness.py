@@ -1,26 +1,25 @@
-"""Politeness scheduling: per-host quota with skew salting.
+"""Politeness scheduling: per-host quota, then the per-crawl budget cap.
 
-North-rule prescription: per-host politeness buckets as salted pandas
-group processing over host-keyed partitions. Reference semantics: at most
-``quota_per_host`` in-flight requests per domain
-(CONCURRENT_REQUESTS_PER_DOMAIN=4, settings.py:46-48; the spider yields
-next URLs only while len(currently_crawling) < quota,
+Reference semantics: at most ``quota_per_host`` in-flight requests per
+domain (CONCURRENT_REQUESTS_PER_DOMAIN=4, settings.py:46-48; the spider
+yields next URLs only while len(currently_crawling) < quota,
 domain_spider.py:538-548), here discretized to "at most q scheduled
 fetches per (crawl, host) per micro-batch".
 
-Two-phase exact top-q under salting (SURVEY.md §7 risk #3):
+Hot-host skew (SURVEY.md §7 risk #3) is handled by Spark itself: a
+``row_number() <= <literal q>`` filter over the (crawl_id, host) window
+plans a Partial ``WindowGroupLimit`` BELOW the (crawl_id, host)
+exchange, so every map task ships at most q rows per host and no single
+task ever receives a hot host's full frontier; the Final limit after
+the exchange keeps the exact host-level top-q. The Partial node needs
+the literal rank filter directly over the window and no explicit
+repartition under it; a per-row quota column or a ``repartition`` that
+already clusters the window input leaves only the Final limit.
 
-  phase 1: repartition by (crawl_id, host, salt) where
-           salt = xxhash64(url_norm) % S, then one pandas pass per
-           PARTITION (mapInPandas) takes each salt-group's local top-q.
-           This is the vectorized form of groupBy.applyInPandas — same
-           host-keyed salted grouping, but one Arrow exchange per
-           partition instead of one python call per group, which matters
-           when there are 10^5+ (host, salt) groups per batch. The union
-           of S local top-q sets provably contains the global top-q,
-           while no single task ever sees a hot host's full frontier.
-  phase 2: window over (crawl_id, host) → row_number ≤ q on the ≤ S·q
-           survivors per host (tiny), giving the exact host-level top-q.
+The per-crawl ``seq_in_batch`` window then sees at most
+hosts-per-crawl × q rows per crawl — domain scoping admits exactly 2
+hosts per crawl (plans/frontier_loop._crawl_dim) — so it stays small at
+any frontier size.
 
 Order key everywhere: (depth ASC, priority_score DESC, discovery_seq ASC)
 — total, data-defined, parallelism-independent.
@@ -28,162 +27,50 @@ Order key everywhere: (depth ASC, priority_score DESC, discovery_seq ASC)
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..policy import CrawlPolicy
-from .sequence import with_sequence
-
-_SORT_COLS = ["depth", "priority_score", "discovery_seq"]
-_SORT_ASC = [True, False, True]
 
 
-def _salt_local_topq(quota: int):
-    """Running top-q per (crawl, host, salt) group across the partition's
-    Arrow batches — memory stays O(groups·q + one batch), never the whole
-    partition, so a hot host's salt slice can exceed executor memory."""
-
-    def take(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: pd.DataFrame | None = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pool = pdf if acc is None else pd.concat([acc, pdf], ignore_index=True)
-            acc = (
-                pool.sort_values(_SORT_COLS, ascending=_SORT_ASC, kind="mergesort")
-                .groupby(["crawl_id", "host", "_salt"], sort=False, observed=True)
-                .head(quota)
-            )
-        if acc is not None and len(acc):
-            yield acc
-
-    return take
+def _order():
+    return F.col("depth").asc(), F.col("priority_score").desc(), F.col("discovery_seq").asc()
 
 
 def select_fetch_batch(
     eligible: DataFrame,
     budgets: DataFrame,
     policy: CrawlPolicy,
-    n_eligible: int | None = None,
     host_quotas: DataFrame | None = None,
-    hosts_per_crawl_bound: int | None = None,
 ) -> DataFrame:
     """Pick this batch's fetch set from eligible frontier rows.
 
     ``budgets``: (crawl_id, remaining) — max_pages minus pages crawled so
     far; always small (one row per crawl), broadcast.
 
-    ``n_eligible``: if the caller already knows the eligible row count and
-    it is below ``policy.salt_threshold``, the salted phase-1 pre-filter
-    is skipped — its only purpose is bounding per-task work under hot-host
-    skew, which cannot bite on a small batch; the window in phase 2 is the
-    exact operator either way.
+    ``host_quotas``: optional (host, quota_h) autothrottle quotas, each
+    ≤ ``policy.quota_per_host``; hosts without a row keep the default.
 
     Returns the scheduled rows with ``seq_in_batch`` (per-crawl trace
     order, 1-based).
     """
-    if n_eligible is not None and n_eligible < policy.salt_threshold:
-        phase1 = eligible
-    else:
-        salted = eligible.withColumn(
-            "_salt", F.pmod(F.xxhash64("url_norm"), F.lit(policy.n_salts))
-        )
-        spark = eligible.sparkSession
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        phase1 = (
-            salted.repartition(n_part, "crawl_id", "host", "_salt")
-            .mapInPandas(_salt_local_topq(policy.quota_per_host), schema=salted.schema)
-            .drop("_salt")
-        )
-
-    window_input_bound = (
-        hosts_per_crawl_bound * policy.quota_per_host
-        if hosts_per_crawl_bound is not None
-        else None
+    host_w = Window.partitionBy("crawl_id", "host").orderBy(*_order())
+    capped = eligible.withColumn("_rn", F.row_number().over(host_w)).where(
+        F.col("_rn") <= policy.quota_per_host
     )
-    use_crawl_window = (
-        window_input_bound is not None
-        and window_input_bound <= policy.seq_singlepart_threshold
-    ) or (n_eligible is not None and n_eligible <= policy.seq_singlepart_threshold)
-    if use_crawl_window:
-        # ONE exchange for both windows (guide §2.4): hash(crawl_id)
-        # satisfies the clustering requirement of the (crawl_id, host)
-        # quota window AND of the downstream per-crawl seq-stamp window (a
-        # hash partitioning on a SUBSET of the window keys clusters them),
-        # so this explicit repartition replaces two back-to-back exchanges
-        # — hash(crawl_id, host), then hash(crawl_id) — with one. Safe on
-        # skew ONLY because this path is gated on a bounded per-crawl
-        # window input (≤ hosts_per_crawl × quota rows per crawl); the
-        # unbounded path below keeps the (crawl_id, host) spread.
-        n_part = int(phase1.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        phase1 = phase1.repartition(n_part, "crawl_id")
-    host_w = Window.partitionBy("crawl_id", "host").orderBy(
-        F.col("depth").asc(), F.col("priority_score").desc(), F.col("discovery_seq").asc()
-    )
-    ranked = phase1.withColumn("_rn", F.row_number().over(host_w))
     if host_quotas is not None:
-        # P2 autothrottle analog: per-host quota (≤ default) from the EWMA
-        # latency state; phase 1's default-quota pre-filter stays a superset
-        ranked = ranked.join(F.broadcast(host_quotas), "host", "left")
-        quota_col = F.coalesce(F.col("quota_h"), F.lit(policy.quota_per_host))
-        phase2 = ranked.where(F.col("_rn") <= quota_col).drop("_rn", "quota_h")
-    else:
-        phase2 = ranked.where(F.col("_rn") <= policy.quota_per_host).drop("_rn")
-
-    # --- seq_in_batch stamp + per-crawl budget cap (VERDICT r2 #1).
-    # The naive form is a row_number window partitioned by crawl_id — with
-    # ONE active crawl whose phase-2 output is large, that sorts the
-    # entire scheduled batch through one task. Two paths:
-    #
-    # * window path: safe whenever the window's INPUT per crawl is small.
-    #   Phase 2 already capped rows to quota per (crawl, host), so the
-    #   input is ≤ hosts_per_crawl × quota_per_host — for this engine's
-    #   domain-scoped crawls (exactly 2 allowed hosts, plans/frontier_loop
-    #   _crawl_dim) that is ≤ 2·quota ≈ 10² rows per crawl REGARDLESS of
-    #   frontier size, so the stamp embeds in the same stage with no extra
-    #   jobs. Callers assert this by passing ``hosts_per_crawl_bound``.
-    # * two-phase path (unbounded-crawl escape hatch, e.g. a caller
-    #   without host scoping): reuse the range-sort machinery from
-    #   operators/sequence.py — one range exchange ordered by (crawl_id,
-    #   depth, -priority, discovery_seq) stamps a GLOBAL consecutive
-    #   sequence (no single-partition stage); the per-crawl 1-based rank
-    #   falls out by subtracting each crawl's minimum global seq (a tiny
-    #   map-side-partial agg, broadcast back). Because the range sort
-    #   leads with crawl_id, every crawl's rows are consecutive in the
-    #   global order, so gseq − min(gseq per crawl) + 1 IS row_number
-    #   over the per-crawl window — same (depth, -priority, seq) order,
-    #   bit-identical trace (tests/test_trace_equality.py
-    #   test_scale_paths_trace_equality; tests/test_politeness.py plan
-    #   assertion).
-    budgeted = phase2.join(F.broadcast(budgets), "crawl_id")
-    if use_crawl_window:
-        crawl_w = Window.partitionBy("crawl_id").orderBy(
-            F.col("depth").asc(),
-            F.col("priority_score").desc(),
-            F.col("discovery_seq").asc(),
+        # P2 autothrottle analog: the per-host quota is ≤ the default, so
+        # it filters the default-quota top-q, which stays a superset
+        capped = (
+            capped.join(F.broadcast(host_quotas), "host", "left")
+            .where(F.col("_rn") <= F.coalesce(F.col("quota_h"), F.lit(policy.quota_per_host)))
+            .drop("quota_h")
         )
-        scheduled = (
-            budgeted.withColumn("seq_in_batch", F.row_number().over(crawl_w))
-            .where(F.col("seq_in_batch") <= F.col("remaining"))
-            .drop("remaining")
-        )
-    else:
-        stamped, _n = with_sequence(
-            budgeted.withColumn("_negp", -F.col("priority_score")),
-            ["crawl_id", "depth", "_negp", "discovery_seq"],
-            seq_col="_gseq",
-        )
-        starts = stamped.groupBy("crawl_id").agg(F.min("_gseq").alias("_start"))
-        scheduled = (
-            stamped.join(F.broadcast(starts), "crawl_id")
-            .withColumn(
-                "seq_in_batch",
-                (F.col("_gseq") - F.col("_start") + F.lit(1)).cast("int"),
-            )
-            .where(F.col("seq_in_batch") <= F.col("remaining"))
-            .drop("remaining", "_negp", "_gseq", "_start")
-        )
-    return scheduled
+    crawl_w = Window.partitionBy("crawl_id").orderBy(*_order())
+    return (
+        capped.drop("_rn")
+        .join(F.broadcast(budgets), "crawl_id")
+        .withColumn("seq_in_batch", F.row_number().over(crawl_w))
+        .where(F.col("seq_in_batch") <= F.col("remaining"))
+        .drop("remaining")
+    )

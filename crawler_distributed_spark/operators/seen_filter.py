@@ -19,23 +19,19 @@ holding the bitmap as ``array<long>`` words (little-endian bit order:
 overall bit ``i`` lives at bit ``i % 64`` of word ``i // 64``). The k
 hash probes are ``pmod(xxhash64(url_norm, seed_k), bits_per_bucket)``.
 
-Probe dispatch (guide §2.4/§3.1 — r6): when the WHOLE bloom table fits
-the broadcast budget (``n_buckets · bits_per_bucket / 8`` bytes ≤
-``broadcast_max_bytes``), the probe is a broadcast hash join plus pure
-Column bit tests (``getbit`` on the word array) — zero exchange of the
-candidates and zero Python. The pre-r6 shape shuffled EVERY candidate
-row by bucket into a Python cogroup just to test 4 bits; that cost one
-full exchange plus a JVM→Python→JVM round trip of the whole candidate
-payload per batch. Above the budget (10^10-seen-row blooms are tens of
-GB) the bucket-cogrouped probe runs instead — each task holds exactly
-one bucket's bitmap, nothing is broadcast, which is what keeps the
-filter partition-local at scale. Build and merge stay bucket-local;
-merge is a plain JVM zip_with OR over the word arrays.
+Probe: a left join of the candidates to the bloom rows on bucket, then
+pure Column bit tests (``getbit`` on the word array) — zero Python. When
+the WHOLE bloom table fits the broadcast budget (``n_buckets ·
+bits_per_bucket / 8`` bytes ≤ ``broadcast_max_bytes``) the join carries
+a broadcast hint, so the candidates are never shuffled. Above it
+(10^10-seen-row blooms are tens of GB) the hint is dropped and the same
+join runs as a bucket-keyed shuffle join — each task meets only its
+buckets' bitmaps, nothing is broadcast, which is what keeps the filter
+partition-local at scale. Build and merge stay bucket-local; merge is a
+plain JVM zip_with OR over the word arrays.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -44,8 +40,8 @@ from pyspark.sql import functions as F
 
 BLOOM_SCHEMA = "bucket int, words array<long>"
 
-# bloom tables at or under this many bitmap bytes take the broadcast
-# JVM-probe path in bloom_split; larger ones stay bucket-cogrouped
+# bloom tables at or under this many bitmap bytes are broadcast to the
+# probe in bloom_split; larger ones are joined by a bucket-keyed shuffle
 BROADCAST_MAX_BYTES = 64 * 1024 * 1024
 
 
@@ -69,10 +65,7 @@ def build_bloom_delta(
     assert bits_per_bucket % 64 == 0, "bits_per_bucket must be word-aligned"
     hashed = seen_delta.select(
         _bucket_col(url_col, n_buckets).alias("_bucket"),
-        *[
-            F.pmod(F.xxhash64(F.col(url_col), F.lit(i)), F.lit(bits_per_bucket)).alias(f"_h{i}")
-            for i in range(k)
-        ],
+        *[_probe_idx(url_col, i, bits_per_bucket).alias(f"_h{i}") for i in range(k)],
     )
     h_names = [f"_h{i}" for i in range(k)]
 
@@ -124,60 +117,21 @@ def bloom_split(
     """Tag candidates with ``maybe_seen``: False = bloom miss = provably
     novel (skip the exact join); True = needs the anti-join.
 
-    Small blooms (see module docstring): broadcast join + Column-level
-    ``getbit`` probes — no candidate shuffle, no Python. Large blooms:
-    bucket cogroup, each task holds exactly one bucket's bitmap."""
+    One probe, two join strategies (see module docstring): the bloom is
+    broadcast when it fits ``broadcast_max_bytes``, else shuffle-joined
+    on bucket. ``n_buckets``/``bits_per_bucket``/``k`` must match the
+    ``build_bloom_delta`` call that built ``bloom``."""
+    words = bloom.select("bucket", F.col("words").alias("_bw"))
     if n_buckets * (bits_per_bucket // 8) <= broadcast_max_bytes:
-        joined = candidates.withColumn(
-            "_bucket", _bucket_col(url_col, n_buckets)
-        ).join(
-            F.broadcast(bloom.select("bucket", F.col("words").alias("_bw"))),
-            F.col("_bucket") == F.col("bucket"),
-            "left",
-        )
-        hit = None
-        for i in range(k):
-            idx = _probe_idx(url_col, i, bits_per_bucket)
-            word = F.get(F.col("_bw"), (idx / F.lit(64)).cast("int"))
-            test = F.getbit(word, F.pmod(idx, F.lit(64)).cast("int")) == 1
-            hit = test if hit is None else (hit & test)
-        maybe = F.col("_bw").isNotNull() & F.coalesce(hit, F.lit(False))
-        return joined.withColumn("maybe_seen", maybe).drop(
-            "bucket", "_bucket", "_bw"
-        )
-
-    from pyspark.sql import types as T
-
-    hashed = candidates.withColumn("_bucket", _bucket_col(url_col, n_buckets))
+        words = F.broadcast(words)
+    joined = candidates.withColumn("_bucket", _bucket_col(url_col, n_buckets)).join(
+        words, F.col("_bucket") == F.col("bucket"), "left"
+    )
+    hit = None
     for i in range(k):
-        hashed = hashed.withColumn(f"_h{i}", _probe_idx(url_col, i, bits_per_bucket))
-    h_names = [f"_h{i}" for i in range(k)]
-    out_schema = T.StructType(
-        [f for f in hashed.schema.fields if f.name != "_bucket"]
-        + [T.StructField("maybe_seen", T.BooleanType(), False)]
-    )
-
-    def probe(cand: pd.DataFrame, blm: pd.DataFrame) -> pd.DataFrame:
-        if not len(cand):
-            return cand.drop(columns=["_bucket"]).assign(maybe_seen=pd.Series([], dtype=bool))
-        if not len(blm):
-            res = cand.drop(columns=["_bucket"]).copy()
-            res["maybe_seen"] = False
-            return res
-        words = np.asarray(blm["words"].iloc[0], dtype=np.int64).view(np.uint64)
-        hit = np.ones(len(cand), dtype=bool)
-        for name in h_names:
-            idx = cand[name].to_numpy(dtype=np.int64)
-            hit &= (
-                (words[idx // 64] >> (idx % 64).astype(np.uint64)) & np.uint64(1)
-            ).astype(bool)
-        res = cand.drop(columns=["_bucket"]).copy()
-        res["maybe_seen"] = hit
-        return res
-
-    return (
-        hashed.groupBy("_bucket")
-        .cogroup(bloom.groupBy("bucket"))
-        .applyInPandas(lambda key, c, b: probe(c, b), schema=out_schema)
-        .drop(*h_names)
-    )
+        idx = _probe_idx(url_col, i, bits_per_bucket)
+        word = F.get(F.col("_bw"), (idx / F.lit(64)).cast("int"))
+        test = F.getbit(word, F.pmod(idx, F.lit(64)).cast("int")) == 1
+        hit = test if hit is None else (hit & test)
+    maybe = F.col("_bw").isNotNull() & F.coalesce(hit, F.lit(False))
+    return joined.withColumn("maybe_seen", maybe).drop("bucket", "_bucket", "_bw")

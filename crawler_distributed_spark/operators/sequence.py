@@ -4,24 +4,27 @@ The frontier needs a globally-unique, data-defined ``discovery_seq``
 (SURVEY.md §7 risk #1: ordering must be defined by data, never by task
 scheduling). The naive ``row_number() OVER (ORDER BY ...)`` collapses to a
 single partition — fine at test scale, fatal at 10^10 rows. This helper
-implements the classic two-phase assignment instead:
+implements the classic two-phase assignment instead, all in the JVM:
 
 1. range-partition + sort by the (total) order key — one exchange — and
-   cache the result;
-2. a counting pass (mapInPandas) emits each partition's FIRST order key
-   and row count;
-3. the driver orders the (first_key, count) pairs and prefix-sums the
-   counts (one tiny list — #partitions entries);
-4. a stamping pass looks up its partition's offset BY ITS OWN FIRST KEY
-   and writes ``seq = start + offset + local_index``.
+   lazily localCheckpoint the result;
+2. a counting pass groups the checkpoint by ``spark_partition_id()`` and
+   returns each partition's row count (one row per partition);
+3. the driver prefix-sums the counts in partition-id order (one tiny
+   list — #partitions entries);
+4. a stamping Project directly over the checkpoint scan writes
+   ``seq = start + offset[pid] + local_index``, where ``local_index`` is
+   ``monotonically_increasing_id() - (pid << 33)``.
 
-Keying the offset table on the partition's first order key (rather than
-``TaskContext.partitionId()``) makes the stamp correct no matter how the
-stamping stage is embedded downstream — unions offset stage partition
-ids, AQE re-plans stages, cache eviction recomputes them — because the
-range-sort puts the same first key in the same logical partition every
-time. Order keys must be unique (caller supplies a tiebreaker column), so
-a first key identifies a partition unambiguously.
+Why partition ids are a sound offset key: the range sort gives partition
+``i`` the ``i``-th ascending key range, and AQE coalescing only merges
+adjacent ranges, so partition-id order IS key order. The checkpoint
+fixes the partitioning once, for both passes. Both
+``spark_partition_id()`` and ``monotonically_increasing_id()`` read the
+index of the RDD partition their Project runs over — the checkpoint's
+own — no matter how the stamped frame is embedded downstream (unions,
+joins and repartitions sit above that Project, and its nondeterministic
+expressions stop the optimizer from pushing anything beneath it).
 
 Because the order key is total, any range partitioning yields the same
 global order, so the assigned sequence is independent of parallelism —
@@ -30,18 +33,12 @@ the property the N-vs-4N identical-output requirement rests on.
 
 from __future__ import annotations
 
-import json
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
+from pyspark.sql import functions as F
 
-
-def _key_of(pdf: pd.DataFrame, order_cols: list[str]) -> str:
-    first = pdf.iloc[0]
-    return json.dumps([first[c].item() if hasattr(first[c], "item") else first[c]
-                       for c in order_cols])
+# monotonically_increasing_id() puts the partition index in the upper 31
+# bits and the row index within the partition in the lower 33
+_ROW_BITS = 33
 
 
 def with_sequence(
@@ -53,7 +50,7 @@ def with_sequence(
     """Append ``seq_col`` = start, start+1, ... in ascending ``order_cols``
     order. ``order_cols`` are column NAMES forming a total order (include a
     unique tiebreaker). Cost: one range exchange + one counting job; no
-    single-partition stage.
+    single-partition stage and no Python.
 
     Returns (stamped_df, total_rows) — the count falls out of the counting
     pass for free, so callers never re-count.
@@ -66,54 +63,20 @@ def with_sequence(
     stamped plan is dropped, instead of accumulating in the CacheManager
     across thousands of batches.
     """
-    from pyspark.sql import functions as F
-
     sorted_df = df.orderBy(*order_cols).localCheckpoint(eager=False)
-
-    # Counting pass in the JVM (r6, guide §4): per partition, the row
-    # count and the MINIMUM order key — which IS the partition's first
-    # key, because the range sort leaves each partition ascending. The
-    # old pass shipped every row through an Arrow mapInPandas just to
-    # read the first row and count; this aggregation is map-side and
-    # moves one row per partition. The key is serialized to the SAME
-    # json the pandas stamp pass produces (_key_of), so the offsets
-    # lookup is unchanged.
-    counts = (
-        sorted_df.groupBy(F.spark_partition_id().alias("_pid"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(F.struct(*order_cols)).alias("k"),
-        )
-        .collect()
+    pid = F.spark_partition_id()
+    counts = dict(
+        sorted_df.groupBy(pid.alias("_pid")).agg(F.count(F.lit(1))).collect()
     )
-    # order partitions by their first key (tuples compare elementwise; the
-    # range sort guarantees partition key-ranges are disjoint)
-    parts = sorted(
-        ((list(r["k"]), json.dumps(list(r["k"])), r["n"]) for r in counts),
-        key=lambda t: t[0],
-    )
-    offsets: dict[str, int] = {}
-    acc = 0
-    for _, raw_key, n in parts:
-        offsets[raw_key] = acc
-        acc += n
-
-    schema = T.StructType(
-        list(sorted_df.schema.fields) + [T.StructField(seq_col, T.LongType(), False)]
-    )
-
-    def stamp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        base = None
-        local = 0
-        for pdf in batches:
-            if len(pdf) and base is None:
-                base = start + offsets[_key_of(pdf, order_cols)]
-            n = len(pdf)
-            pdf = pdf.copy()
-            pdf[seq_col] = pd.array(
-                range(base + local, base + local + n) if n else [], dtype="int64"
-            )
-            local += n
-            yield pdf
-
-    return sorted_df.mapInPandas(stamp, schema=schema), acc
+    if max(counts.values(), default=0) >= 1 << _ROW_BITS:
+        # the local index would spill into the partition-index bits
+        raise OverflowError(f"a range partition holds 2^{_ROW_BITS}+ rows")
+    # offsets[p] = rows in partitions before p (empty partitions have none)
+    offsets, acc = [], 0
+    for p in range(max(counts, default=0) + 1):
+        offsets.append(acc)
+        acc += counts.get(p, 0)
+    offset = F.get(F.array(*[F.lit(o).cast("long") for o in offsets]), pid)
+    local = F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), _ROW_BITS)
+    seq = F.lit(start).cast("long") + offset + local
+    return sorted_df.withColumn(seq_col, seq), acc

@@ -58,7 +58,6 @@ FEATURE_SCHEMA = T.StructType(
     ]
 )
 
-REAL_CODECS_AVAILABLE = False  # PIL/ffmpeg are not in this container
 # formats the stdlib/numpy kernel decodes for real (header parse +
 # frombuffer; png additionally via stdlib zlib + scanline unfiltering;
 # mp4 via ISO-BMFF box walk — container metadata, no codec library)

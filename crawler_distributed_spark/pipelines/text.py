@@ -34,17 +34,6 @@ def bpe_ish_token_count(text: Column) -> Column:
     return words + punct + longs  # long words split ~once under BPE
 
 
-def lang_scores(text: Column) -> Column:
-    """Map of language → marker-hit count (the arg-max is the guess)."""
-    toks = F.split(F.lower(text), r"\s+")
-    entries = []
-    for lang, markers in _LANG_MARKERS.items():
-        score = F.size(F.filter(toks, lambda w: w.isin(markers)))
-        entries.append(F.lit(lang))
-        entries.append(score.cast("string"))
-    return F.create_map(*entries)
-
-
 def lang_guess(text: Column) -> Column:
     """Arg-max language guess over the marker scores ('und' when no hits)."""
     toks = F.split(F.lower(text), r"\s+")

@@ -53,7 +53,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import synth
-from ..functions.urls import canonicalize_url, host_col
+from ..functions.urls import allowed_hosts_for_domain, canonicalize_url, host_col
 from ..operators.admission import admit, dedup_in_batch, filter_unseen, gate_robots
 from ..operators.fetch import fetch_scheduled
 from ..operators.politeness import select_fetch_batch
@@ -236,8 +236,7 @@ def _crawl_dim(spark: SparkSession, seeds: list[dict]) -> DataFrame:
     rows = []
     for s in sorted(seeds, key=lambda s: s["crawl_id"]):
         dom = s["domain"]
-        a1, a2 = (dom, dom[4:]) if dom.startswith("www.") else (dom, f"www.{dom}")
-        rows.append((s["crawl_id"], dom, a1, a2, int(s["max_pages"])))
+        rows.append((s["crawl_id"], dom, *allowed_hosts_for_domain(dom), int(s["max_pages"])))
     return spark.createDataFrame(
         rows, "crawl_id string, domain string, allowed_host_1 string, "
         "allowed_host_2 string, max_pages int"
@@ -493,9 +492,7 @@ def run_crawl(
     bloom = None
     if policy.use_bloom:
         seen_all = store.read_seen(spark, last)
-        bloom = build_bloom_delta(
-            seen_all.select("url_norm"), n_buckets=policy.bloom_buckets
-        ).localCheckpoint()
+        bloom = build_bloom_delta(seen_all.select("url_norm")).localCheckpoint()
 
     def _maybe_ck(df: DataFrame, b: int) -> DataFrame:
         """LAZY localCheckpoint for the small state frames: the first
@@ -585,14 +582,7 @@ def run_crawl(
                     F.floor(F.lit(policy.quota_per_host) / (F.lit(1.0) + F.col("ewma"))).cast("int"),
                 ).alias("quota_h"),
             )
-        scheduled = select_fetch_batch(
-            eligible, budgets, policy, n_eligible=n_elig, host_quotas=host_quotas,
-            # domain scoping (F4) admits exactly 2 hosts per crawl
-            # (_crawl_dim), so the per-crawl politeness window input is
-            # structurally <= 2*quota rows — the window path stays exact
-            # AND embedded at any frontier size
-            hosts_per_crawl_bound=2,
-        )
+        scheduled = select_fetch_batch(eligible, budgets, policy, host_quotas=host_quotas)
         # (max_pages rides the budgets broadcast — scheduled already has it)
         # P6: effective strategy = host escalation level ∨ per-URL 403
         # force-proxy carried on the frontier row (retry_middleware.py:33-55)
@@ -825,8 +815,8 @@ def run_crawl(
         # materialization #2: the admission pipeline, straight into parquet.
         # The bloom split is a pure optimization (novel rows bypass the
         # exact join; output is identical with or without it) — below
-        # bloom_split_min eligible rows its two cogroup exchanges cost more
-        # than the anti-join they shave, so thin batches skip it. The
+        # bloom_split_min eligible rows its tagged-batch checkpoint costs
+        # more than the anti-join it shaves, so thin batches skip it. The
         # admitted row count rides the write as an Observation (no extra
         # job) and gates the bloom delta build below.
         bloom = _resolve("bloom", bloom)
@@ -1052,9 +1042,7 @@ def run_crawl(
             # contributes no new seen rows — the delta build + OR-merge
             # cogroup would be two no-op python stages; skip them outright
             with _timed("bloom merge"):
-                delta = build_bloom_delta(
-                    admitted_r.select("url_norm"), n_buckets=policy.bloom_buckets
-                )
+                delta = build_bloom_delta(admitted_r.select("url_norm"))
                 bloom = merge_blooms(bloom, delta)
                 # checkpoint in the background; resolved before the next
                 # batch's admission consumes the bloom

@@ -62,14 +62,9 @@ class CrawlPolicy:
     max_attempts: int = 3        # retries before a URL is buried as failed
     backoff_cap: int = 8         # batches; delay = min(2^attempts, cap)
     max_batches: int = 10_000    # hard loop guard
-    n_salts: int = 4             # skew salting width for the politeness stage
     checkpoint_every: int = 1    # durable frontier/manifest every N batches
                                  # (outputs are durable every batch; >1 trades
                                  # replay-on-resume for fewer state writes)
-    salt_threshold: int = 2_000_000  # eligible rows below this skip the salted
-                                     # phase-1 politeness pre-filter (it exists
-                                     # to bound per-task work under hot-host
-                                     # skew; the phase-2 window is exact)
     autothrottle: bool = False   # P2 analog: per-host EWMA latency scales
                                  # next batch's quota (deterministic; default
                                  # off to keep the reference-politeness trace)
@@ -89,10 +84,10 @@ class CrawlPolicy:
                                           # SURVEY.md §4 determinism substitution)
     use_bloom: bool = True       # partitioned bloom pre-filter ahead of the
                                  # seen anti-join (bloom misses bypass the join)
-    bloom_buckets: int = 64      # bloom bitmap partitioning width
     bloom_split_min: int = 2048  # eligible rows below which the bloom SPLIT
                                  # is skipped (plain anti-join — identical
-                                 # output; the split's two cogroup exchanges
+                                 # output; the split's tagged-batch
+                                 # checkpoint and extra anti-join branch
                                  # cost more than they shave on thin batches).
                                  # The bloom delta build/merge still runs
                                  # every admitting batch regardless.

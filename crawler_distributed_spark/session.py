@@ -17,6 +17,14 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_mem() -> str:
+    """48g, capped at half the machine's physical RAM: local mode runs
+    every executor thread inside the driver JVM, and a heap larger than
+    the box lets the kernel kill it instead of Spark spilling."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1 << 20)
+    return f"{min(48 * 1024, phys_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "crawler_distributed_spark",
     cpus: int | None = None,
@@ -43,7 +51,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

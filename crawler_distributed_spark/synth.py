@@ -858,23 +858,6 @@ def latency_class_of(cfg: SynthConfig, url_norm: str) -> int:
     return _h(cfg.seed, "lat", url_norm) % 4
 
 
-def fetch_one(cfg: SynthConfig, url_norm: str, strategy_level: int = 0) -> dict:
-    """The full deterministic fetch result for one canonical URL."""
-    st = status_of(cfg, url_norm, strategy_level)
-    ct = content_type_of(cfg, url_norm)
-    html = st == 200 and ct == "text/html"
-    return {
-        "url_norm": url_norm,
-        "status": st,
-        "content_type": ct,
-        "doc_id": doc_id_of(url_norm) if html else None,
-        "outlinks": outlinks_of(cfg, url_norm),
-        "robots_allowed": robots_allowed(cfg, url_norm),
-        "latency_class": latency_class_of(cfg, url_norm),
-        "response_headers": dict(response_headers_of(cfg, url_norm)),
-    }
-
-
 def all_urls(cfg: SynthConfig) -> list[str]:
     """Every canonical URL in the web (homepages + pages)."""
     urls = []

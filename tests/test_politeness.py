@@ -1,4 +1,5 @@
-"""Politeness stage: salted two-phase top-q must be exact."""
+"""Politeness stage: the per-host top-q must be exact, and Spark must cap
+a hot host before the shuffle."""
 
 from pyspark.sql import functions as F
 
@@ -21,12 +22,12 @@ def test_per_host_quota_and_order(spark):
             rows.append(("c1", f"https://{h}/p/{i}", h, 1, 0.0, len(rows)))
     eligible = _frontier(spark, rows)
     budgets = spark.createDataFrame([("c1", 100)], "crawl_id string, remaining int")
-    policy = CrawlPolicy(quota_per_host=3, n_salts=4)
+    policy = CrawlPolicy(quota_per_host=3)
     got = select_fetch_batch(eligible, budgets, policy).collect()
     by_host = {}
     for r in got:
         by_host.setdefault(r.host, []).append(r.discovery_seq)
-    # exactly the 3 earliest seqs per host (skew salting must not lose any)
+    # exactly the 3 earliest seqs per host
     assert sorted(by_host["a.com"]) == [0, 1, 2]
     assert sorted(by_host["b.com"]) == [10, 11, 12]
 
@@ -56,52 +57,45 @@ def test_budget_cap(spark):
     assert sorted(r.seq_in_batch for r in got) == [1, 2, 3, 4]
 
 
-def test_big_batch_has_no_per_crawl_window(spark):
-    """VERDICT r2 #1: above seq_singlepart_threshold the scheduled plan
-    must contain NO window partitioned by crawl_id alone (the ONE active
-    crawl of the north-rule shape would serialize the whole batch through
-    one task) — seq_in_batch comes from the two-phase range-sort stamp.
-    The small path keeps the per-crawl window (bounded by the threshold);
-    both paths must return identical rows."""
-    import re
+def test_hot_host_capped_below_exchange(spark):
+    """The literal ``row_number() <= quota`` filter over (crawl_id, host)
+    must plan a Partial WindowGroupLimit BELOW the (crawl_id, host)
+    Exchange — every map task ships at most quota rows per host, so a hot
+    host never lands whole on one task — with and without autothrottle
+    quotas, and with no Python stage anywhere in the plan."""
+    from crawler_distributed_spark.plans.plan_checks import _indent_of
 
-    rows = []
-    for h in range(6):
-        for i in range(4):
-            rows.append(
-                ("c1", f"https://h{h}/p/{i}", f"h{h}.com", 1, 0.0, len(rows))
-            )
+    rows = [("c1", f"https://hot/p/{i}", "hot", 1, 0.0, i) for i in range(40)]
+    rows += [("c1", f"https://cold/p/{i}", "cold", 1, 0.0, 100 + i) for i in range(3)]
     eligible = _frontier(spark, rows)
-    budgets = spark.createDataFrame([("c1", 11)], "crawl_id string, remaining int")
-
-    def crawl_window_second_args(df):
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        return re.findall(r"windowspecdefinition\(crawl_id#\d+[^,]*, (\w+)#", plan)
-
-    small = select_fetch_batch(
-        eligible, budgets, CrawlPolicy(quota_per_host=3), n_eligible=len(rows)
-    )
-    # sanity: the regex sees the small path's per-crawl window (ordered by
-    # depth right after the partition key)
-    assert "depth" in crawl_window_second_args(small)
-
-    big = select_fetch_batch(
-        eligible,
-        budgets,
-        CrawlPolicy(quota_per_host=3, seq_singlepart_threshold=0, salt_threshold=0),
-        n_eligible=len(rows),
-    )
-    # every remaining crawl_id-led window must also partition by host
-    assert all(a == "host" for a in crawl_window_second_args(big))
-    key = lambda r: (r.host, r.discovery_seq, r.seq_in_batch)  # noqa: E731
-    assert sorted(map(key, small.collect())) == sorted(map(key, big.collect()))
+    budgets = spark.createDataFrame([("c1", 100)], "crawl_id string, remaining int")
+    quotas = spark.createDataFrame([("hot", 2)], "host string, quota_h int")
+    for host_quotas, want in ((None, [0, 1, 2]), (quotas, [0, 1])):
+        out = select_fetch_batch(eligible, budgets, CrawlPolicy(quota_per_host=3), host_quotas)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        lines = plan.splitlines()
+        partial = [i for i, ln in enumerate(lines) if "WindowGroupLimit" in ln and "Partial" in ln]
+        assert len(partial) == 1, plan
+        # nothing beneath the partial limit is an Exchange ...
+        ind = _indent_of(lines[partial[0]])
+        subtree = []
+        for ln in lines[partial[0] + 1:]:
+            if _indent_of(ln) <= ind:
+                break
+            subtree.append(ln)
+        assert not any("Exchange" in ln for ln in subtree), plan
+        # ... and its parent is the (crawl_id, host) Exchange
+        assert "Exchange hashpartitioning(crawl_id#" in lines[partial[0] - 1], plan
+        assert ", host#" in lines[partial[0] - 1], plan
+        assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan, plan
+        assert sorted(r.discovery_seq for r in out.collect()) == want + [100, 101, 102]
 
 
-def test_salting_never_splits_quota_wrongly(spark):
+def test_hot_host_exact_top_q(spark):
     """Hot host with many URLs: exactly quota selected, the global best."""
     rows = [("c1", f"https://hot/p/{i}", "hot", 1, 0.0, 1000 - i) for i in range(200)]
     eligible = _frontier(spark, rows).repartition(8, "url_norm")
     budgets = spark.createDataFrame([("c1", 1000)], "crawl_id string, remaining int")
-    policy = CrawlPolicy(quota_per_host=5, n_salts=8)
+    policy = CrawlPolicy(quota_per_host=5)
     got = select_fetch_batch(eligible, budgets, policy).collect()
     assert sorted(r.discovery_seq for r in got) == [801, 802, 803, 804, 805]

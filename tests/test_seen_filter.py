@@ -109,11 +109,11 @@ def test_bucketed_seen_antijoin_no_exchange(spark, tmp_path):
     assert no_exchange_above(plan, "Scan parquet spark_catalog.default.seen_c_"), plan
 
 
-def test_broadcast_and_cogroup_probes_agree(spark):
-    """r6: bloom_split dispatches by total bloom size — small blooms take
-    a broadcast join + Column getbit probe (no candidate shuffle, no
-    Python), large ones the bucket-cogrouped Python probe. Both paths
-    must tag every candidate identically (same build, same bit layout)."""
+def test_broadcast_and_shuffle_probes_agree(spark):
+    """bloom_split has one Column ``getbit`` probe; bloom size only picks
+    the join strategy — broadcast when the whole bloom fits the budget,
+    a bucket-keyed shuffle join above it. Both must tag every candidate
+    identically, and neither may leave the JVM."""
     seen = _urls(spark, "seen", 400)
     cand = _urls(spark, "seen", 400).unionByName(_urls(spark, "fresh", 400))
     bloom = build_bloom_delta(seen, n_buckets=N_BUCKETS, bits_per_bucket=BITS)
@@ -123,11 +123,21 @@ def test_broadcast_and_cogroup_probes_agree(spark):
             cand, bloom, n_buckets=N_BUCKETS, bits_per_bucket=BITS,
             broadcast_max_bytes=broadcast_max,
         )
-        return sorted((r.url_norm, r.maybe_seen) for r in out.collect())
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "FlatMapCoGroupsInPandas" not in plan and "MapInPandas" not in plan, plan
+        return plan, sorted((r.url_norm, r.maybe_seen) for r in out.collect())
 
-    via_broadcast = tags(1 << 30)   # whole bloom under the budget
-    via_cogroup = tags(0)           # force the at-scale cogroup path
-    assert via_broadcast == via_cogroup
-    # and the broadcast path preserves bloom's no-false-negative contract
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        # no size-based auto-broadcast: only bloom_split's hint decides
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        plan_b, via_broadcast = tags(1 << 30)   # whole bloom under the budget
+        plan_s, via_shuffle = tags(0)           # the at-scale shuffle join
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert "BroadcastHashJoin" in plan_b, plan_b
+    assert "BroadcastHashJoin" not in plan_s and "hashpartitioning(_bucket" in plan_s, plan_s
+    assert via_broadcast == via_shuffle
+    # and the probe preserves bloom's no-false-negative contract
     seen_urls = {r.url_norm for r in seen.collect()}
     assert all(t for (u, t) in via_broadcast if u in seen_urls)

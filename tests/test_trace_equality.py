@@ -214,14 +214,14 @@ def test_autothrottle_ttl_eviction(spark, tmp_path):
 
 
 def test_scale_paths_trace_equality(spark, tmp_path):
-    """Force the at-scale physical paths on the small corpus: salted
-    two-phase politeness pre-filter (salt_threshold=0) AND the two-phase
-    range-sort sequence assignment (seq_singlepart_threshold=0). Both
-    must be semantics-identical to the small-batch paths — engine trace
-    and seen set still equal the oracle exactly. (The default thresholds
-    mean pytest otherwise never executes these operators; the 10^6-URL
-    scaling runs do, but only hash-compare against themselves.)"""
-    pol = CrawlPolicy(salt_threshold=0, seq_singlepart_threshold=0)
+    """Force the at-scale physical path on the small corpus: the
+    two-phase range-sort sequence assignment (seq_singlepart_threshold=0)
+    must be semantics-identical to the small-batch global window — engine
+    trace and seen set still equal the oracle exactly. (The default
+    threshold means pytest otherwise never executes this operator inside
+    the loop; the 10^6-URL scaling runs do, but only hash-compare against
+    themselves.)"""
+    pol = CrawlPolicy(seq_singlepart_threshold=0)
     d = str(tmp_path / "scale_ck")
     robots = spark.createDataFrame(synth.robots_rule_rows(CFG))
     eng = run_crawl(spark, CFG, SEEDS, robots, d, pol)
