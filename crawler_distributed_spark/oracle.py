@@ -228,7 +228,7 @@ def run_oracle(
             sm_child = synth.is_child_sitemap_url(cfg, e.url_norm)
             rb_host = synth.is_robots_url(cfg, e.url_norm)
             # A1 per-domain fetch stats: a page is a 200 of an accepted
-            # type that is NOT a control fetch (engine _is_page); bytes =
+            # type that is NOT a control fetch (engine is_page); bytes =
             # span payload of page rows (0 for non-html pages, whose span
             # array is empty in the synthetic web)
             is_control = (

@@ -203,8 +203,9 @@ def simhash_signatures(
     # Instead, pack 3 per-bit set-counts into 21-bit lanes of one long:
     #   agg_j = Σ_tokens Σ_{k<3} ((h >> (3j+k)) & 1) << (21k)
     # so ceil(bits/3) aggregates carry all counts. Lanes cannot interact
-    # while every per-doc token count stays < 2^21 (~2M tokens/doc — far
-    # beyond any real document). The signature bit is then
+    # while every per-doc token count stays < 2^21 (~2M tokens/doc); a
+    # larger doc raises in the signature Project instead of returning a
+    # wrong signature. The signature bit is then
     # 2·count_i − n_tokens > 0, which equals the old sum(bit·2−1) > 0
     # vote EXACTLY (count_i = set bits, n − count_i = clear bits).
     lanes = 3
@@ -233,6 +234,9 @@ def simhash_signatures(
         )
         term = bit * F.lit(2**i if i < 63 else -(2**63)).cast("long")
         sig = term if sig is None else (sig + term)
+    sig = F.when(F.col("_ntok") < F.lit(1 << lane_w), sig).otherwise(F.raise_error(
+        F.concat(F.lit("simhash: 2^21+ tokens in doc "), F.col(id_col).cast("string"))
+    ))
     return per_doc.select(id_col, sig.alias("simhash"))
 
 

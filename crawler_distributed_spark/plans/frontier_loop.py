@@ -2,68 +2,51 @@
 
 Replaces the reference's process zoo (beanstalkd tubes + crawl-job
 listener + Scrapy spiders + 15 parser workers) with one iterative Spark
-plan per micro-batch:
+plan per micro-batch. ``run_crawl`` is a short driver over named stages,
+each a module-level function over one ``_CrawlState``:
 
-  schedule (politeness top-q + budget cap)
-    → fetch (Arrow UDF over the synthetic web)
-    → outlink admission (filters → canonicalize → dedup → seen anti-join
-       → robots gate) → discovery_seq assignment → frontier insert
-    → atomic checkpoint commit (storage.BatchStore)
+  _schedule (politeness top-q + budget cap + strategy level)
+    → _fetch (Arrow UDF over the synthetic web, or real HTTP)
+    → _advance_state (budget + P6 escalation state)
+    → _candidates → _admit_batch (filters → canonicalize → dedup → seen
+       anti-join → robots gate)
+    → _stamp (discovery_seq) → _next_frontier → _journal
+    → _commit (atomic checkpoint, storage.BatchStore)
 
-Performance shape (local[32] now, 1000 executors later):
-- Each heavy plan materializes EXACTLY ONCE per batch, as its durable
-  parquet write (write-then-readback): `fetched` (materializes politeness
-  + fetch), `admitted` (materializes the admission pipeline), and the
-  frontier localCheckpoint (materializes the state union). Trace, docs,
-  metrics, seen and blocked are read-time projections of the two written
-  tables — no extra jobs, no extra copies.
-- The URL-seen set is never re-materialized: the admission anti-join
-  probes the lazy union of previously written `admitted` parquet dirs
-  (append-only deltas; at 10^6+ batches these would be compacted, which
-  is the Iceberg MERGE swap point in storage.py).
-- Idle backoff gaps are jumped in one step (batch -> min not_before)
-  rather than committed as empty batches; the oracle's batch numbering is
-  preserved because nothing observable happens in the gap.
-- Every batch appends per-partition lineage + metrics (north rule), and a
-  killed job resumes exactly: deterministic replay from the last durable
-  manifest reproduces bit-identical outputs (tests/test_trace_equality.py).
+Performance shape:
+- Each heavy plan materializes EXACTLY ONCE per batch: the `fetched` and
+  `admitted` parquet writes (read back) and the frontier checkpoint.
+  Trace, docs, metrics, seen and blocked are read-time projections of
+  the two written tables.
+- The seen set is never re-materialized: admission anti-joins the
+  append-only `admitted` deltas (periodically compacted, storage.py).
+- Idle backoff gaps are jumped in one step (batch -> min not_before);
+  nothing observable happens in the gap, so batch numbers match the oracle.
+- Every batch journals per-partition lineage (north rule), and a killed
+  job resumes exactly from the last manifest (tests/test_trace_equality.py).
 """
 
 from __future__ import annotations
 
-import contextlib
 import datetime
 import os
 import time
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass
 
-_TIMING = os.environ.get("SPARK_GRAFT_TIMING") == "1"
-
-
-@contextlib.contextmanager
-def _timed(label: str):
-    if not _TIMING:
-        yield
-        return
-    t0 = time.time()
-    yield
-    print(f"      [{label}] {time.time() - t0:.2f}s", flush=True)
-
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import synth
+from ..functions.sitemaps import sitemap_score_col
 from ..functions.urls import allowed_hosts_for_domain, canonicalize_url, host_col
+from ..operators import admission, seen_filter
 from ..operators.admission import admit, dedup_in_batch, filter_unseen, gate_robots
 from ..operators.fetch import fetch_scheduled
 from ..operators.politeness import select_fetch_batch
-from ..functions.sitemaps import sitemap_score_col
 from ..operators.sequence import with_sequence
 from ..policy import (
-    ACCEPTED_CONTENT_TYPES,
-    REDIRECT_STATUSES,
-    RETRYABLE_STATUSES,
-    CrawlPolicy,
+    ACCEPTED_CONTENT_TYPES, REDIRECT_STATUSES, RETRY_POLICY, RETRYABLE_STATUSES, CrawlPolicy,
 )
 from ..storage import BatchStore
 
@@ -78,16 +61,26 @@ _REDIRECT_LIST = sorted(REDIRECT_STATUSES)
 _ACCEPTED_LIST = sorted(ACCEPTED_CONTENT_TYPES)
 
 
-def _is_page():
+def is_page():
     """F6+F7: a page is a 200 response of an accepted content type
     (content_filter_middleware.py:43-51 allowlist) that is NOT a
     robots/sitemap control fetch. Non-html accepted types (xml/plain)
     count toward the budget and are stored, but carry no spans/outlinks
     in the synthetic web."""
+    return ((F.col("status") == 200) & F.col("content_type").isin(_ACCEPTED_LIST)
+            & (F.col("doc_class") == "content"))
+
+
+def _active_pred(b: int, policy: CrawlPolicy):
+    """Q6: a crawl (budget-table row) is active at batch ``b`` iff its page
+    budget remains, its failure cap is unreached, AND ``b`` is below its
+    batch cap (per-seed "max_batches", else policy.max_batches_per_crawl,
+    else unbounded). Budgets are monotone: a crawl never un-finishes."""
+    cap = policy.max_batches_per_crawl
     return (
-        (F.col("status") == 200)
-        & F.col("content_type").isin(_ACCEPTED_LIST)
-        & (F.col("doc_class") == "content")
+        (F.col("pages") < F.col("max_pages"))
+        & (F.col("failed") < F.lit(policy.max_failed_pages))
+        & (F.lit(b) < F.coalesce(F.col("max_batches"), F.lit(1 << 30 if cap is None else cap)))
     )
 
 
@@ -96,29 +89,20 @@ class CrawlRunResult:
     store: BatchStore
     last_batch: int
     batch_seconds: list | None = None  # wall time of each executed batch
-    _max_failed: int = 20              # policy.max_failed_pages at run time
-    _default_cap: int = 1 << 30        # policy.max_batches_per_crawl (or inf)
-    # order-insensitive output hashes ACCUMULATED batch-by-batch as
-    # observe() metrics on the writes that run anyway (bit_xor is
-    # associative/commutative, so the XOR of per-batch bit_xors equals
-    # the full-table scan bit-for-bit — pinned by
-    # tests/test_trace_equality.py). Set only on fresh, complete runs:
-    # {"trace_rows", "trace_hash", "seen_rows", "seen_hash"}. A resumed
-    # or stop_after_batch run leaves this None (partial accumulation
-    # would be a lie) and callers fall back to the full scan.
+    policy: CrawlPolicy = CrawlPolicy()  # the policy the run used
+    # {"trace_rows", "trace_hash", "seen_rows", "seen_hash"}, XOR-accumulated
+    # from observe() metrics on the writes that run anyway; equals the full
+    # bit_xor scan bit-for-bit (tests/test_trace_equality.py). Fresh,
+    # complete runs only: resumed or stopped runs leave None (full scan).
     out_hashes: dict | None = None
 
     def budget(self, spark: SparkSession) -> DataFrame:
-        """Per-crawl budget state (pages/failed/max_pages/max_batches) as
-        a DataFrame — the run path returns tables, never O(#crawls)
-        driver dicts (r3 #7; at the 10^7-crawl shape a collect here would
-        serialize the run end)."""
+        """Per-crawl pages/failed/max_pages/max_batches — a table, never an
+        O(#crawls) driver dict (r3 #7)."""
         return self.store.read_table(spark, self.last_batch, "budget")
 
     def pages_dict(self, spark: SparkSession) -> dict:
-        """{crawl_id: pages} driver-side convenience for tests and CLI
-        summaries; the O(#crawls) collect happens only when a call site
-        explicitly asks for it."""
+        """{crawl_id: pages}: an explicit O(#crawls) collect for tests/CLI."""
         return {r["crawl_id"]: r["pages"] for r in self.budget(spark).collect()}
 
     def _fetched(self, spark: SparkSession) -> DataFrame | None:
@@ -129,9 +113,7 @@ class CrawlRunResult:
 
     def trace(self, spark: SparkSession) -> DataFrame:
         f = self._fetched(spark)
-        return f.select(
-            "crawl_id", "batch_id", "seq_in_batch", "url_norm", "host", "depth"
-        )
+        return f.select("crawl_id", "batch_id", "seq_in_batch", "url_norm", "host", "depth")
 
     def seen(self, spark: SparkSession) -> DataFrame:
         a = self._admitted(spark)
@@ -141,7 +123,7 @@ class CrawlRunResult:
         f = self._fetched(spark)
         if f is None:
             return None
-        return f.where(_is_page()).select(
+        return f.where(is_page()).select(
             "crawl_id", "url_norm", "url_hash", "host", "depth", "status",
             "content_type", "doc_id", "spans", "response_headers",
             F.col("batch_id").alias("fetched_in_batch"),
@@ -161,9 +143,9 @@ class CrawlRunResult:
             return None
         return f.groupBy("crawl_id", "batch_id", "host").agg(
             F.count("*").alias("requests"),
-            F.sum(_is_page().cast("long")).alias("successes"),
+            F.sum(is_page().cast("long")).alias("successes"),
             F.sum((F.col("status") >= 400).cast("long")).alias("failures"),
-            F.sum(F.when(_is_page(), F.size("spans")).otherwise(0)).cast("long").alias("bytes"),
+            F.sum(F.when(is_page(), F.size("spans")).otherwise(0)).cast("long").alias("bytes"),
         )
 
     def lineage(self, spark: SparkSession) -> DataFrame | None:
@@ -178,58 +160,94 @@ class CrawlRunResult:
         )
 
     def frontier_left(self, spark: SparkSession) -> DataFrame:
-        """Frontier rows remaining at exit (finished crawls purged) —
-        oracle-diffed in tests/test_trace_equality.py. Delta replay
-        records schedules/additions, not finished-crawl purges, so the
-        purge is applied at read time exactly like the resume path."""
+        """Frontier rows left at exit, finished crawls purged (oracle-diffed;
+        also the resume path's frontier). Delta replay does not record
+        purges, so the purge applies at read time (budgets are monotone)."""
         f = self.store.read_frontier(spark, self.last_batch, _FRONTIER_COLS)
-        b = self.store.read_table(spark, self.last_batch, "budget")
-        active = b.where(
-            (F.col("pages") < F.col("max_pages"))
-            & (F.col("failed") < F.lit(self._max_failed))
-            & (
-                F.lit(self.last_batch + 1)
-                < F.coalesce(F.col("max_batches"), F.lit(self._default_cap))
-            )
+        active = self.budget(spark).where(
+            _active_pred(self.last_batch + 1, self.policy)
         ).select("crawl_id")
         return f.join(F.broadcast(active), "crawl_id", "left_semi")
 
     def health(self, spark: SparkSession) -> DataFrame:
-        """A4 queue-health view (workers/monitor_worker.py:60-120 checks
-        ready/buried counts per tube and warns on backlog): per crawl —
-        queued rows left, retry backlog (attempts>0, the 'buried jobs may
-        need attention' analog), delayed rows (backoff not yet due),
-        pages/failed vs budget, and a status verdict. Host CPU/mem/disk
-        (:121-139 psutil) stay Spark-UI domain by design."""
+        """A4 queue health (workers/monitor_worker.py:60-120): per crawl,
+        queued rows, retry backlog (attempts>0, the buried-jobs analog),
+        delayed rows (backoff not due), pages/failed vs budget, a status."""
         f = self.frontier_left(spark)
         per_crawl = f.groupBy("crawl_id").agg(
             F.count("*").alias("queued"),
             F.sum((F.col("attempts") > 0).cast("long")).alias("retry_backlog"),
-            F.sum(
-                (F.col("not_before_batch") > self.last_batch).cast("long")
-            ).alias("delayed"),
+            F.sum((F.col("not_before_batch") > self.last_batch).cast("long")).alias("delayed"),
         )
-        budget = self.store.read_table(spark, self.last_batch, "budget")
-        return budget.join(per_crawl, "crawl_id", "left").select(
-            "crawl_id",
-            "pages",
-            "failed",
-            "max_pages",
+        return self.budget(spark).join(per_crawl, "crawl_id", "left").select(
+            "crawl_id", "pages", "failed", "max_pages",
             F.coalesce(F.col("queued"), F.lit(0)).alias("queued"),
             F.coalesce(F.col("retry_backlog"), F.lit(0)).alias("retry_backlog"),
             F.coalesce(F.col("delayed"), F.lit(0)).alias("delayed"),
             F.when(F.col("pages") >= F.col("max_pages"), F.lit("completed"))
-            .when(F.col("failed") >= F.lit(self._max_failed), F.lit("failed_out"))
+            .when(F.col("failed") >= F.lit(self.policy.max_failed_pages), F.lit("failed_out"))
             .when(F.coalesce(F.col("queued"), F.lit(0)) == 0, F.lit("exhausted"))
             .otherwise(F.lit("waiting"))
             .alias("status"),
         )
 
 
-def _table_exists(store: BatchStore, batch_id: int, table: str) -> bool:
-    import os
+@dataclass
+class _CrawlState:
+    """What one batch hands the next. ``budget``/``strat``/``bloom`` may have
+    a background checkpoint in flight under their name (``_Background``)."""
 
-    return os.path.isdir(store.table_path(batch_id, table))
+    frontier: DataFrame
+    next_seq: int
+    budget: DataFrame       # per-crawl pages/failed/max_pages/max_batches
+    strat: DataFrame        # P6: per (crawl, host) count of all-fail batches
+    host_lat: DataFrame | None  # P2 autothrottle per-host latency EWMA
+    bloom: DataFrame | None     # partitioned bloom filter over the seen set
+    acc: dict | None        # CrawlRunResult.out_hashes accumulators
+    pending: tuple | None = None  # next batch's (n_elig, next_nb); None: recount
+
+
+class _Background:
+    """Pool overlapping the journal write and the state checkpoints with
+    the critical path (under AQE a "lazy" localCheckpoint runs its shuffle
+    stages at the call and would block the driver). One future per name,
+    resolved before its first consumer. Leaving the ``with`` block on any
+    path joins the pool and surfaces every future's error."""
+
+    def __init__(self):
+        self._pool = ThreadPoolExecutor(max_workers=4)
+        self._pend: dict[str, Future] = {}
+
+    def submit(self, name: str, fn, *args) -> None:
+        self.resolve(name)
+        self._pend[name] = self._pool.submit(fn, *args)
+
+    def checkpoint(self, name: str, df: DataFrame) -> None:
+        self.submit(name, df.localCheckpoint, False)
+
+    def resolve(self, name: str, current=None):
+        fut = self._pend.pop(name, None)
+        return current if fut is None else fut.result()
+
+    def __enter__(self) -> _Background:
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        self._pool.shutdown(wait=True)
+        errors = [e for e in (f.exception() for f in self._pend.values()) if e is not None]
+        self._pend.clear()
+        if exc is None and errors:
+            raise errors[0]
+        for e in errors:
+            exc.add_note(f"a background job also failed: {e!r}")
+
+
+def _read_state(spark: SparkSession, store: BatchStore, batch: int, table: str,
+                schema: str) -> DataFrame:
+    """State table ``table`` as committed at ``batch``, or an empty one."""
+    if os.path.isdir(store.table_path(batch, table)):
+        return store.read_table(spark, batch, table)
+    return spark.createDataFrame([], schema)
 
 
 def _crawl_dim(spark: SparkSession, seeds: list[dict]) -> DataFrame:
@@ -252,19 +270,11 @@ def _finish_frontier_rows(admitted_ok: DataFrame) -> DataFrame:
     functions.urls.url_fingerprint(url_norm) on the crawl's URL space
     (property-tested) while keeping the hot loop free of Python."""
     return admitted_ok.select(
-        "crawl_id",
-        "url",
-        "url_norm",
-        F.col("url_hash"),
-        F.sha2(F.col("url_norm"), 256).alias("url_fp"),
-        "host",
-        F.col("depth").cast("int").alias("depth"),
-        F.col("priority_score"),
-        "discovery_seq",
-        F.lit("queued").alias("state"),
-        F.lit(0).alias("attempts"),
-        F.lit(0).cast("long").alias("not_before_batch"),
-        F.lit(0).alias("forced_strategy"),
+        "crawl_id", "url", "url_norm", F.col("url_hash"),
+        F.sha2(F.col("url_norm"), 256).alias("url_fp"), "host",
+        F.col("depth").cast("int").alias("depth"), F.col("priority_score"),
+        "discovery_seq", F.lit("queued").alias("state"), F.lit(0).alias("attempts"),
+        F.lit(0).cast("long").alias("not_before_batch"), F.lit(0).alias("forced_strategy"),
     )
 
 
@@ -272,829 +282,542 @@ def _admitted_wide(admitted: DataFrame, batch_id: int) -> DataFrame:
     """Durable ``admitted`` rows: the seen-set delta + robots verdicts +
     everything with_sequence/frontier-insert need downstream."""
     return admitted.select(
-        "crawl_id",
-        F.xxhash64("url_norm").alias("url_hash"),
-        "url_norm",
-        F.lit(batch_id).cast("long").alias("first_seen_batch"),
-        "robots_ok",
-        "url",
-        "host",
-        "parent_seq",
-        "link_idx",
-        "depth",
-        "priority_score",
+        "crawl_id", F.xxhash64("url_norm").alias("url_hash"), "url_norm",
+        F.lit(batch_id).cast("long").alias("first_seen_batch"), "robots_ok", "url",
+        "host", "parent_seq", "link_idx", "depth", "priority_score",
     )
 
 
+def _observe_hash(df: DataFrame, obs: Observation, cols: str) -> DataFrame:
+    """Row count ``n`` and order-insensitive ``h`` = bit_xor(xxhash64(cols))
+    riding ``df``'s write as an Observation (no extra job)."""
+    return df.observe(obs, F.count(F.lit(1)).alias("n"),
+                      F.expr(f"bit_xor(xxhash64({cols}))").alias("h"))
+
+
+def _accumulate(acc: dict | None, kind: str, obs: Observation) -> int:
+    """Fold one write's ``_observe_hash`` into the run's out_hashes."""
+    m = obs.get
+    if acc is not None:
+        acc[f"{kind}_rows"] += int(m["n"] or 0)
+        acc[f"{kind}_hash"] ^= int(m["h"] or 0)
+    return int(m["n"] or 0)
+
+
+def _stamp(rows: DataFrame, start: int, n_hint: int,
+           threshold: int) -> tuple[DataFrame, int | None]:
+    """discovery_seq = ``start`` + rank in the total (parent_seq, link_idx)
+    order. For ``n_hint`` up to ``threshold`` (seq_singlepart_threshold)
+    one global window stamps inside the consumer's own job, with no
+    range-sample / count / stamp jobs, and the count comes back None (the
+    caller reads it off an Observation on that job). Above it the
+    shuffle-scalable two-phase ``with_sequence`` stamps and counts."""
+    if n_hint <= threshold:
+        rank = F.row_number().over(Window.orderBy("parent_seq", "link_idx"))
+        return rows.withColumn("discovery_seq", (rank + F.lit(start - 1)).cast("long")), None
+    return with_sequence(rows, ["parent_seq", "link_idx"], start=start)
+
+
 def init_crawl(
-    spark: SparkSession,
-    seeds: list[dict],
-    robots_rules: DataFrame,
-    store: BatchStore,
-    seq_singlepart_threshold: int = 20_000,
-) -> tuple[DataFrame, int]:
+    spark: SparkSession, seeds: list[dict], robots_rules: DataFrame,
+    store: BatchStore, seq_singlepart_threshold: int = 20_000,
+) -> tuple[DataFrame, int, tuple[int, int]]:
     """Seed admission, committed as batch=-1 (reference: start_urls are
     enqueued unfiltered, domain_spider.py:219-265; robots gating still
-    applies per north rule). Returns (frontier_df, next_seq)."""
+    applies per north rule). Returns ``(frontier_df, next_seq, (seen_rows,
+    seen_hash))`` — the last pair is the seed batch's contribution to
+    ``CrawlRunResult.out_hashes``."""
     ordered = sorted(seeds, key=lambda s: s["crawl_id"])
     rows = []
     for idx, s in enumerate(ordered):
         seed_url = s["url"] or f"https://{s['domain']}/"
-        # the submission's Q2 numeric priority (e.g. an earlier epoch's
-        # PageRank via pipelines/graph.submission_priorities) rides the
-        # seed frontier row. Sign convention: submissions order ASCENDING
-        # (queue style), the loop's order key DESCENDING on
-        # priority_score — so the row carries the negation; the oracle
-        # applies the same rule.
+        # the submission's Q2 priority (e.g. an earlier epoch's PageRank,
+        # pipelines/graph.submission_priorities) orders ASCENDING, the
+        # loop DESCENDING on priority_score: the row carries the negation
+        # (the oracle applies the same rule)
         pri = -float(s.get("priority") or 0.0)
-        rows.append(
-            (s["crawl_id"], seed_url, canonicalize_url(seed_url), 0, idx, 0, pri)
-        )
-    cand = spark.createDataFrame(
-        rows,
-        "crawl_id string, url string, url_norm string, parent_seq long, "
-        "link_idx int, depth int, priority_score double",
-    ).withColumn("host", host_col(F.col("url_norm")))
+        rows.append((s["crawl_id"], seed_url, canonicalize_url(seed_url), 0, idx, 0, pri))
+    schema = ("crawl_id string, url string, url_norm string, parent_seq long, "
+              "link_idx int, depth int, priority_score double")
+    cand = spark.createDataFrame(rows, schema).withColumn("host", host_col(F.col("url_norm")))
     empty_seen = spark.createDataFrame([], "crawl_id string, url_norm string")
     deduped = dedup_in_batch(
         cand.withColumnRenamed("url", "raw_url")
         .withColumn("allowed_host_1", F.lit(None).cast("string"))
         .withColumn("allowed_host_2", F.lit(None).cast("string"))
     )
-    unseen = filter_unseen(deduped, empty_seen)
-    admitted = gate_robots(unseen, robots_rules)
+    admitted = gate_robots(filter_unseen(deduped, empty_seen), robots_rules)
 
     seed_obs = Observation("seen-init")
-    store.write_table(
-        _admitted_wide(admitted, -1).observe(
-            seed_obs,
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(crawl_id, url_norm))").alias("h"),
-        ),
-        -1,
-        "admitted",
+    wide = _admitted_wide(admitted, -1)
+    store.write_table(_observe_hash(wide, seed_obs, "crawl_id, url_norm"), -1, "admitted")
+    queued, n_queued = _stamp(
+        store.read_table(spark, -1, "admitted").where("robots_ok"), 0, len(seeds),
+        seq_singlepart_threshold,
     )
-    sm = seed_obs.get
-    admitted_r = store.read_table(spark, -1, "admitted")
-
-    robots_ok_rows = admitted_r.where("robots_ok")
-    if len(seeds) <= seq_singlepart_threshold:
-        # small seed set: one global window stamps seqs inside the
-        # frontier-write job itself (same values as with_sequence — the
-        # identical (parent_seq, link_idx) total order, 0-based) instead
-        # of paying the range-sample + count + stamp jobs of the
-        # two-phase path; the count rides the write as an Observation
-        from pyspark.sql import Window as _WS
-
-        queued = robots_ok_rows.withColumn(
-            "discovery_seq",
-            (
-                F.row_number().over(_WS.orderBy("parent_seq", "link_idx")) - 1
-            ).cast("long"),
-        )
-        fr_obs = Observation("frontier-init")
-        store.write_table(
-            _finish_frontier_rows(queued).observe(
-                fr_obs, F.count(F.lit(1)).alias("n")
-            ),
-            -1,
-            "frontier",
-        )
+    fr_obs = Observation("frontier-init")
+    store.write_table(
+        _finish_frontier_rows(queued).observe(fr_obs, F.count(F.lit(1)).alias("n")),
+        -1, "frontier",
+    )
+    if n_queued is None:
         n_queued = int(fr_obs.get["n"] or 0)
-    else:
-        queued, n_queued = with_sequence(
-            robots_ok_rows,
-            ["parent_seq", "link_idx"],
-            start=0,
-        )
-        store.write_table(_finish_frontier_rows(queued), -1, "frontier")
-    frontier = store.read_table(spark, -1, "frontier")
     budget = spark.createDataFrame(
-        [
-            (s["crawl_id"], 0, 0, int(s["max_pages"]), s.get("max_batches"))
-            for s in ordered
-        ],
+        [(s["crawl_id"], 0, 0, int(s["max_pages"]), s.get("max_batches")) for s in ordered],
         "crawl_id string, pages int, failed int, max_pages int, max_batches int",
     )
     store.write_table(budget, -1, "budget")
     store.commit(-1, {"next_seq": int(n_queued)})
-    return frontier, int(n_queued), (int(sm["n"] or 0), int(sm["h"] or 0))
+    sm = seed_obs.get
+    return (
+        store.read_table(spark, -1, "frontier"), int(n_queued),
+        (int(sm["n"] or 0), int(sm["h"] or 0)),
+    )
+
+
+# --- batch stages ------------------------------------------------------------
+
+
+def _count_eligible(avail: DataFrame, batch: int) -> tuple[int, int | None]:
+    """Bootstrap / post-jump eligibility count (one driver job); every
+    other batch reads it off the previous frontier checkpoint."""
+    counts = avail.agg(
+        F.sum((F.col("not_before_batch") <= batch).cast("long")).alias("elig"),
+        F.min(F.when(F.col("not_before_batch") > batch, F.col("not_before_batch")))
+        .alias("next_nb"),
+    ).collect()[0]
+    return counts["elig"] or 0, counts["next_nb"]
+
+
+def _schedule(
+    st: _CrawlState, avail: DataFrame, budgets: DataFrame, batch: int,
+    policy: CrawlPolicy, bg: _Background,
+) -> DataFrame:
+    """Politeness top-q per host (autothrottled quotas when on) under the
+    budget cap, plus each row's P6 fetch strategy level."""
+    eligible = avail.where(F.col("not_before_batch") <= batch).drop("remaining", "max_pages")
+    host_quotas = None
+    if policy.autothrottle:
+        host_quotas = st.host_lat.select("host", F.greatest(
+            F.lit(1),
+            F.floor(F.lit(policy.quota_per_host) / (F.lit(1.0) + F.col("ewma"))).cast("int"),
+        ).alias("quota_h"))
+    scheduled = select_fetch_batch(eligible, budgets, policy, host_quotas=host_quotas)
+    # effective strategy = host escalation level ∨ per-URL 403 force-proxy
+    # carried on the frontier row (retry_middleware.py:33-55). The strat
+    # dim is O(#crawls × hosts) like the budgets dim; an explicit
+    # broadcast stops an SMJ against a stats-less checkpoint scan
+    st.strat = bg.resolve("strat", st.strat)
+    return scheduled.join(F.broadcast(st.strat), ["crawl_id", "host"], "left").withColumn(
+        "strategy_level", F.greatest(
+            F.least(F.coalesce(F.col("fail_batches"), F.lit(0)), F.lit(2)),
+            F.col("forced_strategy"),
+        ),
+    ).drop("fail_batches")
+
+
+def _fetch(
+    spark: SparkSession, store: BatchStore, st: _CrawlState, scheduled: DataFrame,
+    batch: int, n_elig: int, cfg: synth.SynthConfig, fetcher,
+) -> DataFrame:
+    """Materialization #1: politeness + fetch into parquet, the trace hash
+    riding the write. The row hint caps the Arrow stage's partition count
+    (partitioning never affects values)."""
+    fetched = (fetch_scheduled(scheduled, cfg, n_rows_hint=n_elig) if fetcher is None
+               else fetcher(scheduled, n_elig))
+    obs = Observation(f"trace-{batch}")
+    fetched = fetched.withColumn("batch_id", F.lit(batch).cast("long"))
+    store.write_table(_observe_hash(
+        fetched, obs, "crawl_id, batch_id, seq_in_batch, url_norm, depth"
+    ), batch, "fetched")
+    _accumulate(st.acc, "trace", obs)
+    return store.read_table(spark, batch, "fetched")
+
+
+def _advance_state(
+    st: _CrawlState, fetched: DataFrame, policy: CrawlPolicy, bg: _Background
+) -> None:
+    """Budget (pages + failures, ONE aggregation — r3 #3) and P6
+    escalation state (hosts whose every fetch failed escalate one level;
+    level = min(2, fail_batches): direct -> proxy -> render,
+    base_spider.py:151-244). Both checkpoint in the background."""
+    page_pred = F.lit(True) if policy.count_scheduled_in_budget else is_page()
+    deltas = fetched.groupBy("crawl_id").agg(
+        F.sum(page_pred.cast("long")).alias("_n"),
+        F.sum((F.col("status") >= 400).cast("long")).alias("_f"),
+    )
+    st.budget = st.budget.join(deltas, "crawl_id", "left").select(
+        "crawl_id",
+        (F.col("pages") + F.coalesce(F.col("_n"), F.lit(0))).cast("int").alias("pages"),
+        (F.col("failed") + F.coalesce(F.col("_f"), F.lit(0))).cast("int").alias("failed"),
+        "max_pages", "max_batches",
+    )
+    bg.checkpoint("budget", st.budget)
+    host_fail = fetched.groupBy("crawl_id", "host").agg(
+        (F.max(F.when(F.col("status") < 400, 1).otherwise(0)) == 0).alias("_allfail")
+    )
+    st.strat = st.strat.join(host_fail, ["crawl_id", "host"], "full").select(
+        "crawl_id", "host", (
+            F.coalesce(F.col("fail_batches"), F.lit(0))
+            + F.when(F.coalesce(F.col("_allfail"), F.lit(False)), 1).otherwise(0)
+        ).cast("int").alias("fail_batches"),
+    )
+    bg.checkpoint("strat", st.strat)
+
+
+def _retries(fetched: DataFrame, batch: int, policy: CrawlPolicy) -> DataFrame:
+    """Q7/P8: per-status backoff multiplier and retry cap, backoff in
+    batches, bury past the cap; 403 retries force the proxy strategy
+    (retry_middleware.py:33-55)."""
+    mult = F.lit(1.0)
+    max_r = F.lit(0)
+    for st_code, (m, r) in RETRY_POLICY.items():
+        mult = F.when(F.col("status") == st_code, F.lit(m)).otherwise(mult)
+        max_r = F.when(
+            F.col("status") == st_code, F.lit(min(r, policy.max_attempts))
+        ).otherwise(max_r)
+    return (
+        fetched.where(F.col("status").isin(_RETRYABLE_LIST) & (F.col("attempts") < max_r))
+        .withColumn("attempts", F.col("attempts") + 1)
+        .withColumn("not_before_batch", F.lit(batch) + F.least(
+            F.ceil(mult * F.pow(F.lit(2.0), F.col("attempts"))),
+            F.lit(policy.backoff_cap).cast("long"),
+        ))
+        .withColumn("forced_strategy", F.when(F.col("status") == 403, F.lit(1))
+                    .otherwise(F.col("forced_strategy")))
+        .select(*_FRONTIER_COLS)
+    )
+
+
+def _candidates(
+    st: _CrawlState, fetched: DataFrame, crawls: DataFrame, batch: int,
+    policy: CrawlPolicy, bg: _Background,
+) -> DataFrame:
+    """Outlink candidates of this batch's fetches, restricted to active
+    crawls and carrying the F4 scoping dim."""
+    def children(df: DataFrame, *cols) -> DataFrame:
+        return df.select("crawl_id", F.col("discovery_seq").alias("parent_seq"),
+                         (F.col("depth") + 1).alias("depth"), *cols)
+
+    parsed = children(
+        fetched.where(is_page()), F.posexplode("outlinks").alias("link_idx", "raw_url")
+    ).withColumn("priority_score", F.lit(0.0))
+    redirected = fetched.where(
+        F.col("status").isin(_REDIRECT_LIST) & (F.size("outlinks") > 0)
+    ).select(
+        "crawl_id", F.col("discovery_seq").alias("parent_seq"), F.col("depth"),
+        F.lit(0).alias("link_idx"), F.col("outlinks").getItem(0).alias("raw_url"),
+        F.lit(0.0).alias("priority_score"),
+    )
+    # S6/Q3/Q4: sitemap-discovered URLs — scored (frozen clock), ranked by
+    # score, truncated to the crawl's max_pages (sitemap_utils.py:374-433;
+    # max_pages rides the fetched row from the budgets broadcast)
+    sm = (
+        children(
+            fetched.where(F.size("sitemap_entries") > 0),
+            "max_pages", F.explode("sitemap_entries").alias("e"),
+        )
+        .withColumn("priority_score", sitemap_score_col(
+            F.col("e.priority"), F.col("e.lastmod"), F.col("e.changefreq"),
+            F.lit(policy.sitemap_now_date).cast("date"),
+        ))
+        .withColumn("link_idx", F.row_number().over(
+            Window.partitionBy("crawl_id", "parent_seq")
+            .orderBy(F.desc("priority_score"), F.asc("e.url"))
+        ) - 1)
+        .where(F.col("link_idx") < F.col("max_pages"))
+        .select("crawl_id", "parent_seq", "depth", "link_idx",
+                F.col("e.url").alias("raw_url"), "priority_score")
+    )
+    # S5: robots.txt fetches surface the located sitemap URL as a CONTROL
+    # link, admitted with the F1-F5 content filters bypassed (the
+    # reference fetches it directly, sitemap_utils.py:65-121)
+    ctrl = children(
+        fetched.where(F.size("discovered") > 0),
+        F.posexplode("discovered").alias("link_idx", "raw_url"),
+    ).withColumn("priority_score", F.lit(0.0))
+    # active-crawl restriction + F4 scoping dim as ONE broadcast (an isin()
+    # literal list breaks the plan at 10^4+ crawls; two broadcasts were two
+    # O(#crawls) build jobs per batch)
+    st.budget = bg.resolve("budget", st.budget)
+    active = st.budget.where(_active_pred(batch, policy)).select("crawl_id")
+    cand_dim = crawls.select(
+        "crawl_id", "allowed_host_1", "allowed_host_2"
+    ).join(active, "crawl_id", "left_semi")
+    return (
+        parsed.unionByName(redirected).unionByName(sm)
+        .withColumn("is_control", F.lit(False))
+        .unionByName(ctrl.withColumn("is_control", F.lit(True)))
+        .join(F.broadcast(cand_dim), "crawl_id")
+    )
+
+
+def _admit_batch(
+    spark: SparkSession, store: BatchStore, st: _CrawlState, candidates: DataFrame,
+    robots_agg: DataFrame, batch: int, n_elig: int, cfg: synth.SynthConfig,
+    policy: CrawlPolicy, bg: _Background,
+) -> tuple[DataFrame, int]:
+    """Materialization #2: admission into parquet; returns the read-back
+    ``admitted`` table and its row count. The bloom split is a pure
+    optimization, skipped below bloom_split_min eligible rows."""
+    seen = store.read_seen_parts(spark, batch - 1)
+    st.bloom = bg.resolve("bloom", st.bloom)
+    use_split = st.bloom is not None and n_elig >= policy.bloom_split_min
+    admitted = admit(
+        candidates, seen, robots_agg, bloom=st.bloom if use_split else None,
+        n_rows_hint=n_elig * max(1, cfg.branching),
+    )
+    obs = Observation(f"adm-{batch}")
+    wide = _admitted_wide(admitted, batch)
+    store.write_table(_observe_hash(wide, obs, "crawl_id, url_norm"), batch, "admitted")
+    n_rows = _accumulate(st.acc, "seen", obs)
+    return store.read_table(spark, batch, "admitted"), n_rows
+
+
+def _next_frontier(
+    st: _CrawlState, fetched: DataFrame, retries: DataFrame, queued_new: DataFrame,
+    batch: int, policy: CrawlPolicy,
+) -> int:
+    """Materialization #3: the next frontier as a checkpoint, finished
+    crawls purged; the NEXT batch's eligibility rides it as an Observation.
+    Returns this batch's admissions: the rows with seq >= next_seq (the
+    purge cannot drop them; admission ran behind the same active set)."""
+    next_active = st.budget.where(_active_pred(batch + 1, policy)).select("crawl_id")
+    obs = Observation(f"elig-{batch}")
+    st.frontier = (
+        # scheduled seqs come from the MATERIALIZED fetched table (1:1
+        # with the scheduled rows) — re-deriving them from the lazy plan
+        # would recompute the whole politeness stage inside this job
+        st.frontier.join(fetched.select("discovery_seq"), "discovery_seq", "left_anti")
+        .select(*_FRONTIER_COLS)
+        .unionByName(retries)
+        .unionByName(_finish_frontier_rows(queued_new))
+        .join(F.broadcast(next_active), "crawl_id", "left_semi")
+        .observe(
+            obs,
+            F.sum((F.col("not_before_batch") <= batch + 1).cast("long")).alias("elig"),
+            F.min(F.when(F.col("not_before_batch") > batch + 1, F.col("not_before_batch")))
+            .alias("next_nb"),
+            F.sum((F.col("discovery_seq") >= F.lit(st.next_seq)).cast("long")).alias("n_new"),
+        )
+    ).localCheckpoint()
+    m = obs.get
+    st.pending = (int(m["elig"] or 0), m["next_nb"])
+    return int(m["n_new"] or 0)
+
+
+def _journal(
+    st: _CrawlState, fetched: DataFrame, batch: int, seq_floor: int,
+    n_elig: int, n_admitted: int,
+) -> DataFrame:
+    """The per-batch journal, O(batch), one write (r3 #3): 'rm' rows (the
+    scheduled seqs), 'add' rows (retries + new admissions) and per-partition
+    'lineage' rows. storage.read_frontier replays it over the newest
+    snapshot, so the durable cost per batch is not O(frontier)."""
+    ftypes = {f.name: f.dataType for f in st.frontier.schema.fields}
+    # `add` rows come from the checkpointed frontier, not a re-run of the
+    # stamp plan: retries were scheduled this batch, new rows carry seq >=
+    # seq_floor (purged crawls' rows are absent; readers re-apply the purge)
+    add_rows = (
+        st.frontier.join(
+            fetched.select("discovery_seq").withColumn("_sch", F.lit(True)),
+            "discovery_seq", "left",
+        )
+        .where((F.col("discovery_seq") >= F.lit(seq_floor)) | F.col("_sch").isNotNull())
+        .drop("_sch")
+        .select(*_FRONTIER_COLS)
+        .withColumn("_op", F.lit("add"))
+    )
+    rm_rows = fetched.select(*[
+        F.col(c) if c == "discovery_seq" else F.lit(None).cast(ftypes[c]).alias(c)
+        for c in _FRONTIER_COLS
+    ]).withColumn("_op", F.lit("rm"))
+    lineage = fetched.groupBy(F.spark_partition_id().alias("partition_id")).agg(
+        F.count("*").alias("rows_fetched"), F.sum(is_page().cast("long")).alias("rows_ok"),
+    ).select(
+        F.lit(batch).cast("long").alias("batch_id"), F.col("partition_id"),
+        F.lit(n_elig).cast("long").alias("rows_in"), F.col("rows_fetched").cast("long"),
+        F.col("rows_ok").cast("long").alias("rows_deduped"),
+        F.lit(n_admitted).cast("long").alias("rows_admitted"),
+        F.lit(datetime.datetime.now(datetime.timezone.utc).isoformat()).alias("commit_ts"),
+        F.lit("lineage").alias("_op"),
+    )
+    return (
+        rm_rows.unionByName(add_rows)
+        .withColumn("_b", F.lit(batch).cast("long"))
+        .unionByName(lineage, allowMissingColumns=True)
+    )
+
+
+def _update_host_lat(
+    host_lat: DataFrame, fetched: DataFrame, batch: int, policy: CrawlPolicy
+) -> DataFrame:
+    """P2 autothrottle: per-host EWMA of observed latency. With a TTL (r3
+    #8) hosts idle > ttl batches leave the table and re-seed from their
+    first batch mean on return (oracle.py applies the same rule)."""
+    obs = fetched.groupBy("host").agg(F.avg("latency_class").alias("_m"))
+    seen_now = F.col("_m").isNotNull()
+    host_lat = host_lat.join(obs, "host", "full").select(
+        "host",
+        F.when(
+            F.col("ewma").isNotNull() & seen_now,
+            F.lit(policy.ewma_alpha) * F.col("_m")
+            + F.lit(1.0 - policy.ewma_alpha) * F.col("ewma"),
+        ).when(seen_now, F.col("_m")).otherwise(F.col("ewma")).alias("ewma"),
+        F.when(seen_now, F.lit(batch).cast("long")).otherwise(F.col("last_b")).alias("last_b"),
+    )
+    if policy.autothrottle_ttl_batches:
+        host_lat = host_lat.where(
+            F.lit(batch) - F.col("last_b") <= F.lit(policy.autothrottle_ttl_batches)
+        )
+    return host_lat.localCheckpoint(eager=False)  # truncates the lineage
+
+
+def _commit(
+    store: BatchStore, st: _CrawlState, bg: _Background, batch: int, snapshot: bool
+) -> None:
+    """Durable commit of ``batch``: the state tables (and a frontier
+    snapshot), then the in-flight journal, then the manifest, which is the
+    commit point. Anything newer than the last manifest rolls back on resume."""
+    st.budget = bg.resolve("budget", st.budget)
+    st.strat = bg.resolve("strat", st.strat)
+    if snapshot:
+        store.write_table(st.frontier, batch, "frontier")
+    store.write_table(st.budget, batch, "budget")
+    store.write_table(st.strat, batch, "strategy")
+    if st.host_lat is not None:
+        store.write_table(st.host_lat, batch, "hostlat")
+    bg.resolve("journal")
+    store.commit(batch, {"next_seq": st.next_seq})
 
 
 def run_crawl(
-    spark: SparkSession,
-    cfg: synth.SynthConfig,
-    seeds: list[dict],
-    robots_rules: DataFrame,
-    checkpoint_dir: str,
-    policy: CrawlPolicy = CrawlPolicy(),
-    resume: bool = False,
-    stop_after_batch: int | None = None,
-    fetcher=None,
+    spark: SparkSession, cfg: synth.SynthConfig, seeds: list[dict],
+    robots_rules: DataFrame, checkpoint_dir: str, policy: CrawlPolicy = CrawlPolicy(),
+    resume: bool = False, stop_after_batch: int | None = None, fetcher=None,
 ) -> CrawlRunResult:
     """Run (or resume) the crawl to completion. ``stop_after_batch`` kills
     the loop right after committing that batch — used by the resume tests.
 
     ``fetcher(scheduled_df, n_rows_hint) -> DataFrame`` swaps the fetch
     transport (default: the deterministic synthetic web; pass
-    ``operators.http_fetch.fetch_scheduled_http`` for real HTTP) — the
-    loop's politeness/admission/seen/checkpoint machinery is
-    transport-agnostic, it only needs the fetch output schema."""
+    ``operators.http_fetch.fetch_scheduled_http`` for real HTTP); the loop
+    only needs the fetch output schema."""
     store = BatchStore(checkpoint_dir)
     store.rollback_uncommitted()
     last = store.last_committed()
-
-    # Q6 per-crawl batch budget (CLOSESPIDER_TIMEOUT analog): a crawl is
-    # active at batch b iff its page budget remains, its failure cap is
-    # unreached, AND b is below its batch cap (per-seed "max_batches",
-    # else policy.max_batches_per_crawl, else unbounded)
-    _default_cap = (
-        policy.max_batches_per_crawl
-        if policy.max_batches_per_crawl is not None
-        else (1 << 30)
-    )
-
-    def _active_pred(b: int):
-        return (
-            (F.col("pages") < F.col("max_pages"))
-            & (F.col("failed") < F.lit(policy.max_failed_pages))
-            & (F.lit(b) < F.coalesce(F.col("max_batches"), F.lit(_default_cap)))
-        )
-
-    # output-hash accumulators (see CrawlRunResult.out_hashes): valid only
-    # for fresh runs — a resume cannot cheaply reconstruct the prior
-    # batches' contributions without the full scan it exists to avoid
-    acc: dict | None = None
     if not resume or last is None:
         if last is not None:
-            raise ValueError(
-                f"checkpoint {checkpoint_dir} already has state; pass resume=True"
-            )
-        with _timed("init_crawl"):
-            frontier, next_seq, (seed_n, seed_h) = init_crawl(
-                spark, seeds, robots_rules, store,
-                seq_singlepart_threshold=policy.seq_singlepart_threshold,
-            )
-        acc = {
-            "trace_rows": 0, "trace_hash": 0,
-            "seen_rows": seed_n, "seen_hash": seed_h,
-        }
+            raise ValueError(f"checkpoint {checkpoint_dir} already has state; pass resume=True")
+        frontier, next_seq, (seed_n, seed_h) = init_crawl(
+            spark, seeds, robots_rules, store,
+            seq_singlepart_threshold=policy.seq_singlepart_threshold,
+        )
+        # out_hashes accumulate on fresh runs only: a resume cannot cheaply
+        # reconstruct the prior batches' contributions
+        acc = {"trace_rows": 0, "trace_hash": 0, "seen_rows": seed_n, "seen_hash": seed_h}
         last = -1
     else:
-        manifest = store.read_manifest(last)
-        next_seq = manifest["next_seq"]
-        frontier = store.read_frontier(spark, last, _FRONTIER_COLS)
-        # delta replay records schedules/additions, not finished-crawl
-        # purges; apply the purge once with the committed budget (budgets
-        # are monotone — a finished crawl never un-finishes, so purging
-        # at resume equals purging every batch)
-        _active = (
-            store.read_table(spark, last, "budget")
-            .where(_active_pred(last + 1))
-            .select("crawl_id")
-        )
-        frontier = frontier.join(F.broadcast(_active), "crawl_id", "left_semi")
+        next_seq = store.read_manifest(last)["next_seq"]
+        frontier = CrawlRunResult(store, last, policy=policy).frontier_left(spark)
+        acc = None
 
     crawls = _crawl_dim(spark, seeds).cache()
-    # per-crawl budget lives as a Spark state table, not a driver dict —
-    # every O(#crawls) driver loop/collect would serialize the batch at
-    # 10^5+ crawls (and 10^7 on a real cluster)
-    budget_state = store.read_table(spark, last, "budget").localCheckpoint()
-    # loop-invariant dimension: aggregate + cache the robots rules once
-    from ..operators.admission import aggregate_robots_rules
-    from ..operators.seen_filter import build_bloom_delta, merge_blooms
-
-    robots_agg = aggregate_robots_rules(robots_rules).cache()
-    robots_agg.count()
-
-    # partitioned bloom filter over the seen set (north rule): rebuilt from
-    # the admitted deltas on start/resume, OR-merged with each batch's delta
-    # P2 autothrottle state: per-host EWMA of fetch latency_class
-    host_lat = (
-        store.read_table(spark, last, "hostlat")
-        if policy.autothrottle and _table_exists(store, last, "hostlat")
-        else (
-            spark.createDataFrame([], "host string, ewma double, last_b long")
-            if policy.autothrottle
-            else None
-        )
+    robots_agg = admission.aggregate_robots_rules(robots_rules).cache()
+    robots_agg.count()  # loop-invariant dimension, aggregated once
+    # per-crawl state lives in Spark tables, never driver dicts: every
+    # O(#crawls) driver loop/collect would serialize the batch at 10^5+
+    # crawls. The bloom is rebuilt from the seen set on start/resume.
+    st = _CrawlState(
+        frontier=frontier, next_seq=next_seq, acc=acc,
+        budget=store.read_table(spark, last, "budget").localCheckpoint(),
+        strat=_read_state(
+            spark, store, last, "strategy", "crawl_id string, host string, fail_batches int"
+        ).localCheckpoint(),
+        host_lat=_read_state(
+            spark, store, last, "hostlat", "host string, ewma double, last_b long"
+        ) if policy.autothrottle else None,
+        bloom=seen_filter.build_bloom_delta(
+            store.read_seen(spark, last).select("url_norm")
+        ).localCheckpoint() if policy.use_bloom else None,
     )
-
-    # P6 escalation state: per (crawl, host) count of all-fail batches;
-    # strategy level = min(2, fail_batches) (direct -> proxy -> render,
-    # base_spider.py:151-244 made batch-deterministic)
-    strat_state = (
-        store.read_table(spark, last, "strategy")
-        if _table_exists(store, last, "strategy")
-        else spark.createDataFrame([], "crawl_id string, host string, fail_batches int")
-    ).localCheckpoint()
-
-    bloom = None
-    if policy.use_bloom:
-        seen_all = store.read_seen(spark, last)
-        bloom = build_bloom_delta(seen_all.select("url_norm")).localCheckpoint()
-
-    def _maybe_ck(df: DataFrame, b: int) -> DataFrame:
-        """LAZY localCheckpoint for the small state frames: the first
-        consumer's job materializes it (no dedicated driver job), every
-        later consumer in the batch reads the cached blocks, and lineage
-        is truncated so chains never deepen across batches."""
-        return df.localCheckpoint(eager=False)
 
     batch = last + 1
     last_committed = last
+    stopped = False
     batch_seconds: list = []
-    # Background pool overlapping independent per-batch jobs with the
-    # critical path (guide §2.6: actions are only sequential because the
-    # driver calls them sequentially): the journal write plus the small
-    # state-table checkpoints (budget/strategy/bloom). Under AQE a "lazy"
-    # localCheckpoint materializes its shuffle stages eagerly, so each of
-    # these otherwise blocks the driver ~1 s per batch back-to-back.
-    # Every future is resolved (`_resolve`) strictly before its first
-    # consumer, so ordering semantics are unchanged; the journal future
-    # is additionally flushed ahead of every manifest commit, keeping the
-    # commit protocol intact (a journal is always durable before the
-    # manifest that covers it; anything newer than the last manifest is
-    # rolled back on resume).
-    from concurrent.futures import ThreadPoolExecutor
-
-    _journal_pool = ThreadPoolExecutor(max_workers=4)
-    _journal_state: dict = {"fut": None}
-    _pend: dict = {}
-
-    def _submit_ck(name: str, df: DataFrame) -> None:
-        _pend[name] = _journal_pool.submit(df.localCheckpoint, False)
-
-    def _resolve(name: str, current):
-        fut = _pend.pop(name, None)
-        return fut.result() if fut is not None else current
-
-    def _flush_journal() -> None:
-        fut = _journal_state.get("fut")
-        if fut is not None:
-            _journal_state["fut"] = None
-            fut.result()
-    # eligibility for the NEXT batch rides the frontier checkpoint as an
-    # Observation (no dedicated count job); None -> bootstrap/jump recount
-    pending: tuple | None = None
-    while batch < policy.max_batches:
-        _bt0 = time.time()
-        # budgets carries max_pages too: the fetch stage needs it for the
-        # sitemap-index early break (domain_spider.py:326-354), and budget
-        # state already holds it — carrying it here saves a second
-        # per-batch O(#crawls) broadcast build (the former crawls-dim join)
-        budgets = budget_state.where(_active_pred(batch)).select(
-            "crawl_id",
-            (F.col("max_pages") - F.col("pages")).alias("remaining"),
-            "max_pages",
-        )
-
-        avail = frontier.join(F.broadcast(budgets), "crawl_id")
-        if pending is None:
-            with _timed("counts"):
-                counts = avail.agg(
-                    F.sum((F.col("not_before_batch") <= batch).cast("long")).alias("elig"),
-                    F.min(
-                        F.when(F.col("not_before_batch") > batch, F.col("not_before_batch"))
-                    ).alias("next_nb"),
-                ).collect()[0]
-            n_elig, next_nb = counts["elig"] or 0, counts["next_nb"]
-        else:
-            n_elig, next_nb = pending
-        if n_elig == 0:
-            if next_nb is not None:
+    with _Background() as bg:
+        while batch < policy.max_batches:
+            t0 = time.time()
+            # budgets carry max_pages for the fetch stage's sitemap-index
+            # early break (domain_spider.py:326-354)
+            budgets = st.budget.where(_active_pred(batch, policy)).select(
+                "crawl_id", (F.col("max_pages") - F.col("pages")).alias("remaining"), "max_pages",
+            )
+            avail = st.frontier.join(F.broadcast(budgets), "crawl_id")
+            n_elig, next_nb = st.pending or _count_eligible(avail, batch)
+            if n_elig == 0:
+                if next_nb is None:
+                    break
                 # jump the idle backoff gap in one step; nothing observable
                 # happens in between, so batch numbering stays oracle-equal
-                batch = int(next_nb)
-                pending = None  # recount at the jump target
+                batch, st.pending = int(next_nb), None
                 continue
-            break
 
-        eligible = avail.where(F.col("not_before_batch") <= batch).drop(
-            "remaining", "max_pages"
-        )
-        host_quotas = None
-        if policy.autothrottle:
-            host_quotas = host_lat.select(
-                "host",
-                F.greatest(
-                    F.lit(1),
-                    F.floor(F.lit(policy.quota_per_host) / (F.lit(1.0) + F.col("ewma"))).cast("int"),
-                ).alias("quota_h"),
+            scheduled = _schedule(st, avail, budgets, batch, policy, bg)
+            fetched = _fetch(spark, store, st, scheduled, batch, n_elig, cfg, fetcher)
+            _advance_state(st, fetched, policy, bg)
+            retries = _retries(fetched, batch, policy)
+            candidates = _candidates(st, fetched, crawls, batch, policy, bg)
+            admitted, n_admitted_rows = _admit_batch(
+                spark, store, st, candidates, robots_agg, batch, n_elig, cfg, policy, bg
             )
-        scheduled = select_fetch_batch(eligible, budgets, policy, host_quotas=host_quotas)
-        # (max_pages rides the budgets broadcast — scheduled already has it)
-        # P6: effective strategy = host escalation level ∨ per-URL 403
-        # force-proxy carried on the frontier row (retry_middleware.py:33-55)
-        # strat_state is O(#crawls × hosts-per-crawl) like the budgets dim
-        # (already broadcast by design); an explicit broadcast stops the
-        # planner from SMJ-ing the batch against a stats-less RDD scan
-        strat_state = _resolve("strat", strat_state)
-        scheduled = scheduled.join(
-            F.broadcast(strat_state), ["crawl_id", "host"], "left"
-        ).withColumn(
-            "strategy_level",
-            F.greatest(
-                F.least(F.coalesce(F.col("fail_batches"), F.lit(0)), F.lit(2)),
-                F.col("forced_strategy"),
-            ),
-        ).drop("fail_batches")
+            queued_new, n_admitted = _stamp(
+                admitted.where("robots_ok"), st.next_seq, n_elig,
+                policy.seq_singlepart_threshold,
+            )
+            n_new = _next_frontier(st, fetched, retries, queued_new, batch, policy)
+            if n_admitted is None:
+                n_admitted = n_new
+            seq_floor = st.next_seq
+            st.next_seq += n_admitted
+            # the journal reads only the frontier checkpoint and the fetched
+            # parquet, so it overlaps the rest of the batch; it only has to
+            # be on disk before the next manifest (see _commit)
+            bg.submit(
+                "journal", store.write_table,
+                _journal(st, fetched, batch, seq_floor, n_elig, n_admitted),
+                batch, "frontier_delta",
+            )
+            stopped = stop_after_batch is not None and batch >= stop_after_batch
+            # work now or after a backoff gap, and no stop or loop guard
+            has_next = not stopped and batch + 1 < policy.max_batches and (
+                st.pending[0] > 0 or st.pending[1] is not None)
 
-        # materialization #1: politeness + fetch, straight into parquet.
-        # n_rows_hint caps the Arrow-stage partition count by the batch's
-        # row count: fat waves keep full parallelism, thin tail waves stop
-        # paying (shuffle.partitions − needed) empty python tasks per job —
-        # a pure per-batch-floor cut (partitioning never affects values).
-        with _timed("fetch+schedule write"):
-            _fetch = fetcher or (
-                lambda s, hint: fetch_scheduled(s, cfg, n_rows_hint=hint)
-            )
-            # the run's trace hash rides this write as an Observation —
-            # XOR-accumulated per batch, it equals the end-of-run
-            # full-trace bit_xor scan bit-for-bit (associativity), so
-            # callers like scripts/scaling_run.py need no final
-            # O(total-urls) aggregation job at all (VERDICT r4 #1)
-            tr_obs = Observation(f"trace-{batch}")
-            store.write_table(
-                _fetch(scheduled, n_elig).withColumn(
-                    "batch_id", F.lit(batch).cast("long")
-                ).observe(
-                    tr_obs,
-                    F.count(F.lit(1)).alias("n"),
-                    F.expr(
-                        "bit_xor(xxhash64("
-                        "crawl_id, batch_id, seq_in_batch, url_norm, depth))"
-                    ).alias("h"),
-                ),
-                batch,
-                "fetched",
-            )
-            if acc is not None:
-                tm = tr_obs.get
-                acc["trace_rows"] += int(tm["n"] or 0)
-                acc["trace_hash"] ^= int(tm["h"] or 0)
-        fetched = store.read_table(spark, batch, "fetched")
-
-        # ONE aggregation pass over the fetched read for both budget
-        # deltas (pages) and fail deltas (r3 #3: every separate
-        # post-fetch agg is a per-batch fixed cost the thin tail pays)
-        page_pred = (
-            F.lit(True) if policy.count_scheduled_in_budget else _is_page()
-        )
-        deltas = fetched.groupBy("crawl_id").agg(
-            F.sum(page_pred.cast("long")).alias("_n"),
-            F.sum((F.col("status") >= 400).cast("long")).alias("_f"),
-        )
-        with _timed("budget update"):
-            budget_state = (
-                budget_state.join(deltas, "crawl_id", "left")
-                .select(
-                    "crawl_id",
-                    (F.col("pages") + F.coalesce(F.col("_n"), F.lit(0)))
-                    .cast("int")
-                    .alias("pages"),
-                    (F.col("failed") + F.coalesce(F.col("_f"), F.lit(0)))
-                    .cast("int")
-                    .alias("failed"),
-                    "max_pages",
-                    "max_batches",
-                )
-            )
-            # checkpoint in the background; resolved before active_df below
-            _submit_ck("budget", budget_state)
-        # P6: hosts whose every fetch this batch failed escalate one level
-        host_fail = fetched.groupBy("crawl_id", "host").agg(
-            (F.max(F.when(F.col("status") < 400, 1).otherwise(0)) == 0).alias("_allfail")
-        )
-        strat_state = (
-            strat_state.join(host_fail, ["crawl_id", "host"], "full")
-            .select(
-                "crawl_id",
-                "host",
-                (
-                    F.coalesce(F.col("fail_batches"), F.lit(0))
-                    + F.when(F.coalesce(F.col("_allfail"), F.lit(False)), 1).otherwise(0)
-                )
-                .cast("int")
-                .alias("fail_batches"),
-            )
-        )
-        # checkpoint in the background; resolved before next batch's
-        # scheduled join (and before any durable write this batch)
-        _submit_ck("strat", strat_state)
-
-        # --- retries (Q7/P8: per-status multiplier + per-status retry cap,
-        # backoff in batches, bury past the cap — retry_middleware.py:33-55)
-        _plan_t0 = time.time()
-        from ..policy import RETRY_POLICY
-
-        retryable = F.col("status").isin(_RETRYABLE_LIST)
-        mult = F.lit(1.0)
-        max_r = F.lit(0)
-        for st_code, (m, r) in RETRY_POLICY.items():
-            mult = F.when(F.col("status") == st_code, F.lit(m)).otherwise(mult)
-            max_r = F.when(
-                F.col("status") == st_code, F.lit(min(r, policy.max_attempts))
-            ).otherwise(max_r)
-        retries = (
-            fetched.where(retryable & (F.col("attempts") < max_r))
-            .withColumn("attempts", F.col("attempts") + 1)
-            .withColumn(
-                "not_before_batch",
-                F.lit(batch)
-                + F.least(
-                    F.ceil(mult * F.pow(F.lit(2.0), F.col("attempts"))),
-                    F.lit(policy.backoff_cap).cast("long"),
-                ),
-            )
-            # 403 retries force the proxy strategy (retry_middleware.py:33-55)
-            .withColumn(
-                "forced_strategy",
-                F.when(F.col("status") == 403, F.lit(1)).otherwise(
-                    F.col("forced_strategy")
-                ),
-            )
-            .select(*_FRONTIER_COLS)
-        )
-
-        # --- outlink candidates from this batch's fetches
-        parsed = fetched.where(_is_page()).select(
-            "crawl_id",
-            F.col("discovery_seq").alias("parent_seq"),
-            (F.col("depth") + 1).alias("depth"),
-            F.posexplode("outlinks").alias("link_idx", "raw_url"),
-        ).withColumn("priority_score", F.lit(0.0))
-        redirected = fetched.where(
-            F.col("status").isin(_REDIRECT_LIST) & (F.size("outlinks") > 0)
-        ).select(
-            "crawl_id",
-            F.col("discovery_seq").alias("parent_seq"),
-            F.col("depth"),
-            F.lit(0).alias("link_idx"),
-            F.col("outlinks").getItem(0).alias("raw_url"),
-            F.lit(0.0).alias("priority_score"),
-        )
-        # S6/Q3/Q4: sitemap-discovered URLs — scored (frozen clock), ranked
-        # by score, truncated to the crawl's max_pages (sitemap_utils.py:
-        # 374-433), admitted with the score as priority_score
-        from pyspark.sql import Window as _W
-
-        sm = (
-            fetched.where(F.size("sitemap_entries") > 0)
-            .select(
-                "crawl_id",
-                F.col("discovery_seq").alias("parent_seq"),
-                (F.col("depth") + 1).alias("depth"),
-                # max_pages rides the fetched row (scheduled carries it from
-                # the budgets broadcast) — no per-batch crawls-dim join here
-                "max_pages",
-                F.explode("sitemap_entries").alias("e"),
-            )
-            .withColumn(
-                "priority_score",
-                sitemap_score_col(
-                    F.col("e.priority"), F.col("e.lastmod"), F.col("e.changefreq"),
-                    F.lit(policy.sitemap_now_date).cast("date"),
-                ),
-            )
-            .withColumn(
-                "link_idx",
-                F.row_number().over(
-                    _W.partitionBy("crawl_id", "parent_seq").orderBy(
-                        F.desc("priority_score"), F.asc("e.url")
-                    )
-                )
-                - 1,
-            )
-            .where(F.col("link_idx") < F.col("max_pages"))
-            .select(
-                "crawl_id", "parent_seq", "depth", "link_idx",
-                F.col("e.url").alias("raw_url"), "priority_score",
-            )
-        )
-        # S5: robots.txt fetches surface the located sitemap URL as a
-        # CONTROL link — admitted with the F1-F5 content filters bypassed
-        # (the reference fetches the located sitemap directly,
-        # sitemap_utils.py:65-121, never through LinkExtractor)
-        ctrl = (
-            fetched.where(F.size("discovered") > 0)
-            .select(
-                "crawl_id",
-                F.col("discovery_seq").alias("parent_seq"),
-                (F.col("depth") + 1).alias("depth"),
-                F.posexplode("discovered").alias("link_idx", "raw_url"),
-            )
-            .withColumn("priority_score", F.lit(0.0))
-        )
-        # active-crawl restriction + F4 scoping dim, as ONE broadcast: the
-        # allowed-hosts dim semi-filtered by the active budget set (an
-        # isin() literal list would break the plan at 10^4+ crawls; two
-        # separate broadcasts were two O(#crawls) per-batch build jobs —
-        # the inner join against the pre-filtered dim is equivalent)
-        budget_state = _resolve("budget", budget_state)
-        active_df = budget_state.where(_active_pred(batch)).select("crawl_id")
-        cand_dim = crawls.select(
-            "crawl_id", "allowed_host_1", "allowed_host_2"
-        ).join(active_df, "crawl_id", "left_semi")
-        candidates = (
-            parsed.unionByName(redirected).unionByName(sm)
-            .withColumn("is_control", F.lit(False))
-            .unionByName(ctrl.withColumn("is_control", F.lit(True)))
-            .join(F.broadcast(cand_dim), "crawl_id")
-        )
-
-        if _TIMING:
-            print(f"      [candidates build] {time.time() - _plan_t0:.2f}s",
-                  flush=True)
-        # the seen set, split for the anti-join (storage.read_seen_parts):
-        # the bucketed compacted copy scans with NO exchange on its side,
-        # deltas ride as a small second anti-join; the periodic compaction
-        # keeps this read O(compact_every) files, not O(#batches)
-        seen = store.read_seen_parts(spark, batch - 1)
-
-        # materialization #2: the admission pipeline, straight into parquet.
-        # The bloom split is a pure optimization (novel rows bypass the
-        # exact join; output is identical with or without it) — below
-        # bloom_split_min eligible rows its tagged-batch checkpoint costs
-        # more than the anti-join it shaves, so thin batches skip it. The
-        # admitted row count rides the write as an Observation (no extra
-        # job) and gates the bloom delta build below.
-        bloom = _resolve("bloom", bloom)
-        use_split = bloom is not None and n_elig >= policy.bloom_split_min
-        admitted = admit(
-            candidates,
-            seen,
-            robots_agg,
-            bloom=bloom if use_split else None,
-            n_rows_hint=n_elig * max(1, cfg.branching),
-        )
-        adm_obs = Observation(f"adm-{batch}")
-        with _timed("admission write"):
-            store.write_table(
-                _admitted_wide(admitted, batch).observe(
-                    adm_obs,
-                    F.count(F.lit(1)).alias("n"),
-                    # seen-set hash contribution (see tr_obs above)
-                    F.expr("bit_xor(xxhash64(crawl_id, url_norm))").alias("h"),
-                ),
-                batch,
-                "admitted",
-            )
-        am = adm_obs.get
-        n_admitted_rows = int(am["n"] or 0)
-        if acc is not None:
-            acc["seen_rows"] += n_admitted_rows
-            acc["seen_hash"] ^= int(am["h"] or 0)
-        admitted_r = store.read_table(spark, batch, "admitted")
-
-        robots_ok_rows = admitted_r.where("robots_ok")
-        if n_elig <= policy.seq_singlepart_threshold:
-            # small batch: one global window stamps consecutive seqs (a
-            # single sort of bounded size, embedded in the frontier job —
-            # no range-sample / materialize / count jobs); the admitted
-            # count is recovered from the frontier Observation below
-            # (rows with seq >= next_seq are exactly this batch's)
-            from pyspark.sql import Window as _WS
-
-            queued_new = robots_ok_rows.withColumn(
-                "discovery_seq",
-                (
-                    F.row_number().over(_WS.orderBy("parent_seq", "link_idx"))
-                    + F.lit(next_seq - 1)
-                ).cast("long"),
-            )
-            n_admitted = None
-        else:
-            with _timed("with_sequence count"):
-                queued_new, n_admitted = with_sequence(
-                    robots_ok_rows, ["parent_seq", "link_idx"], start=next_seq
-                )
-
-        # materialization #3: next frontier state (kept hot for the next
-        # iteration; parquet-persisted on durable batches). The rebuild
-        # also PURGES finished crawls' rows (pages/failed budgets never
-        # un-finish, so those rows can never be scheduled again) and
-        # carries the NEXT batch's eligibility aggregates as an
-        # Observation — the per-batch count job folds into this one.
-        next_active = budget_state.where(_active_pred(batch + 1)).select("crawl_id")
-        elig_obs = Observation(f"elig-{batch}")
-        with _timed("frontier checkpoint"):
-            frontier = (
-                # scheduled seqs come from the MATERIALIZED fetched table
-                # (1:1 with the scheduled rows) — re-deriving them from
-                # the lazy `scheduled` plan would recompute the whole
-                # politeness stage inside this job
-                frontier.join(fetched.select("discovery_seq"), "discovery_seq", "left_anti")
-                .select(*_FRONTIER_COLS)
-                .unionByName(retries)
-                .unionByName(_finish_frontier_rows(queued_new))
-                .join(F.broadcast(next_active), "crawl_id", "left_semi")
-                .observe(
-                    elig_obs,
-                    F.sum(
-                        (F.col("not_before_batch") <= batch + 1).cast("long")
-                    ).alias("elig"),
-                    F.min(
-                        F.when(
-                            F.col("not_before_batch") > batch + 1,
-                            F.col("not_before_batch"),
-                        )
-                    ).alias("next_nb"),
-                    # this batch's admissions: old rows and retries all carry
-                    # seq < next_seq; the purge cannot drop new rows because
-                    # admission already ran behind the identical active set
-                    F.sum(
-                        (F.col("discovery_seq") >= F.lit(next_seq)).cast("long")
-                    ).alias("n_new"),
-                )
-            ).localCheckpoint()
-        em = elig_obs.get
-        pending = (int(em["elig"] or 0), em["next_nb"])
-        if n_admitted is None:
-            n_admitted = int(em["n_new"] or 0)
-        seq_floor = next_seq  # this batch's new admissions carry seq >= this
-        next_seq += n_admitted
-
-        # durable per-batch JOURNAL — O(batch), ONE write job (r3 #3: the
-        # separate frontier_delta + lineage writes were two of the ~4
-        # fixed per-batch jobs dragging the thin-wave tail). Rows:
-        #   'rm'      — the scheduled seqs leave (from the materialized
-        #               fetched table)
-        #   'add'     — retries + new admissions enter
-        #   'lineage' — per-partition lineage + metrics (north rule),
-        #               null frontier columns
-        # Full O(frontier) snapshots happen only every
-        # frontier_snapshot_every batches; storage.read_frontier replays
-        # the 'rm'/'add' rows over the newest snapshot (the Iceberg MERGE
-        # equivalent — at a 10^10-row frontier the per-batch durable cost
-        # must not be O(frontier)) and ignores 'lineage' rows.
-        with _timed("journal build"):
-            _ftypes = {f.name: f.dataType for f in frontier.schema.fields}
-            # `add` rows = retries + this batch's new admissions, read back
-            # from the just-checkpointed frontier's CACHED blocks instead of
-            # re-running the stamp/window plan (pre-r4 this job re-executed
-            # the whole with_sequence + sha2 pipeline a second time — pure
-            # duplicated per-row work). Retries are exactly the frontier
-            # rows whose seq was scheduled this batch; new rows carry
-            # seq >= seq_floor. Rows of crawls purged by next_active are
-            # absent here, which is read-equivalent: budgets are monotone,
-            # so every journal consumer (read_frontier replay at resume,
-            # frontier_left) re-applies the same purge at read time.
-            add_rows = (
-                frontier.join(
-                    fetched.select("discovery_seq").withColumn(
-                        "_sch", F.lit(True)
-                    ),
-                    "discovery_seq",
-                    "left",
-                )
-                .where(
-                    (F.col("discovery_seq") >= F.lit(seq_floor))
-                    | F.col("_sch").isNotNull()
-                )
-                .drop("_sch")
-                .select(*_FRONTIER_COLS)
-                .withColumn("_op", F.lit("add"))
-            )
-            rm_rows = fetched.select(
-                *[
-                    F.col(c)
-                    if c == "discovery_seq"
-                    else F.lit(None).cast(_ftypes[c]).alias(c)
-                    for c in _FRONTIER_COLS
-                ]
-            ).withColumn("_op", F.lit("rm"))
-            lineage = (
-                fetched.groupBy(F.spark_partition_id().alias("partition_id"))
-                .agg(
-                    F.count("*").alias("rows_fetched"),
-                    F.sum(_is_page().cast("long")).alias("rows_ok"),
-                )
-                .select(
-                    F.lit(batch).cast("long").alias("batch_id"),
-                    F.col("partition_id"),
-                    F.lit(n_elig).cast("long").alias("rows_in"),
-                    F.col("rows_fetched").cast("long"),
-                    F.col("rows_ok").cast("long").alias("rows_deduped"),
-                    F.lit(n_admitted).cast("long").alias("rows_admitted"),
-                    F.lit(
-                        datetime.datetime.now(datetime.timezone.utc).isoformat()
-                    ).alias("commit_ts"),
-                    F.lit("lineage").alias("_op"),
-                )
-            )
-            journal_df = (
-                rm_rows.unionByName(add_rows)
-                .withColumn("_b", F.lit(batch).cast("long"))
-                .unionByName(lineage, allowMissingColumns=True)
-            )
-        # OVERLAP the journal write with the rest of the batch (guide
-        # §2.6: actions are only sequential because the driver calls them
-        # sequentially). The journal reads this batch's CACHED frontier
-        # blocks + the materialized fetched parquet — nothing the
-        # remaining per-batch work (autothrottle/bloom/state writes, the
-        # next batch's fetch) mutates — and durability only requires it
-        # on disk BEFORE the next manifest commit (the commit point): a
-        # torn journal above the last manifest is rolled back on resume
-        # exactly like any other uncommitted write. `_flush_journal()`
-        # joins the in-flight write at every commit/return point below.
-        _flush_journal()
-        _journal_state["fut"] = _journal_pool.submit(
-            store.write_table, journal_df, batch, "frontier_delta"
-        )
-
-        if policy.autothrottle:
-            # EWMA update from this batch's observed latencies (all
-            # scheduled fetches of the host)
-            obs = fetched.groupBy("host").agg(F.avg("latency_class").alias("_m"))
-            host_lat = (
-                host_lat.join(obs, "host", "full")
-                .select(
-                    "host",
-                    F.when(
-                        F.col("ewma").isNotNull() & F.col("_m").isNotNull(),
-                        F.lit(policy.ewma_alpha) * F.col("_m")
-                        + F.lit(1.0 - policy.ewma_alpha) * F.col("ewma"),
-                    )
-                    .when(F.col("_m").isNotNull(), F.col("_m"))
-                    .otherwise(F.col("ewma"))
-                    .alias("ewma"),
-                    F.when(F.col("_m").isNotNull(), F.lit(batch).cast("long"))
-                    .otherwise(F.col("last_b"))
-                    .alias("last_b"),
-                )
-            )
-            if policy.autothrottle_ttl_batches:
-                # TTL eviction (r3 #8): hosts idle > ttl batches leave the
-                # state table — host_lat is bounded by the active-host set
-                # of the trailing window, not the 10^8-host crawl lifetime.
-                # The EWMA re-seeds from the first batch mean on return
-                # (the `_m is not null & ewma is null` branch above);
-                # oracle.py applies the identical rule at the same point.
-                host_lat = host_lat.where(
-                    F.lit(batch) - F.col("last_b")
-                    <= F.lit(policy.autothrottle_ttl_batches)
-                )
-            host_lat = _maybe_ck(host_lat, batch)
-
-        if policy.use_bloom and n_admitted_rows:
-            # a batch that admitted nothing (common in the thin tail)
-            # contributes no new seen rows — the delta build + OR-merge
-            # cogroup would be two no-op python stages; skip them outright
-            with _timed("bloom merge"):
-                delta = build_bloom_delta(admitted_r.select("url_norm"))
-                bloom = merge_blooms(bloom, delta)
-                # checkpoint in the background; resolved before the next
-                # batch's admission consumes the bloom
-                _submit_ck("bloom", bloom)
-
-        durable = (
-            policy.checkpoint_every <= 1
-            or batch % policy.checkpoint_every == 0
-            or (stop_after_batch is not None and batch >= stop_after_batch)
-        )
-        if durable:
-            budget_state = _resolve("budget", budget_state)
-            strat_state = _resolve("strat", strat_state)
-            if batch % policy.frontier_snapshot_every == 0:
-                store.write_table(frontier, batch, "frontier")
-            store.write_table(budget_state, batch, "budget")
-            store.write_table(strat_state, batch, "strategy")
             if policy.autothrottle:
-                store.write_table(host_lat, batch, "hostlat")
-            _flush_journal()  # the journal must precede its manifest
-            store.commit(batch, {"next_seq": next_seq})
-            last_committed = batch
-            if policy.compact_seen_every and batch % policy.compact_seen_every == 0:
-                with _timed("seen compaction"):
-                    store.compact_seen(
-                        spark, batch,
-                        n_buckets=int(spark.conf.get("spark.sql.shuffle.partitions")),
-                    )
+                st.host_lat = _update_host_lat(st.host_lat, fetched, batch, policy)
+            if policy.use_bloom and n_admitted_rows and has_next:
+                # OR-merge this batch's seen delta; skipped when nothing was
+                # admitted or no batch follows (resume rebuilds the bloom)
+                st.bloom = seen_filter.merge_blooms(
+                    st.bloom, seen_filter.build_bloom_delta(admitted.select("url_norm"))
+                )
+                bg.checkpoint("bloom", st.bloom)
 
-        batch_seconds.append(round(time.time() - _bt0, 2))
-        if stop_after_batch is not None and batch >= stop_after_batch:
-            _journal_pool.shutdown(wait=True)
-            return CrawlRunResult(
-                store, batch, batch_seconds,
-                policy.max_failed_pages, _default_cap,
-            )
-        batch += 1
+            if policy.checkpoint_every <= 1 or batch % policy.checkpoint_every == 0 or stopped:
+                _commit(store, st, bg, batch, batch % policy.frontier_snapshot_every == 0)
+                last_committed = batch
+                if policy.compact_seen_every and batch % policy.compact_seen_every == 0:
+                    n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
+                    store.compact_seen(spark, batch, n_buckets=n_buckets)
+            batch_seconds.append(round(time.time() - t0, 2))
+            batch += 1
+            if not has_next:
+                break
 
-    # final commit so the terminal state is always durable
-    final = batch - 1
-    if final > last_committed:
-        with _timed("final commit"):
-            budget_state = _resolve("budget", budget_state)
-            strat_state = _resolve("strat", strat_state)
-            store.write_table(frontier, final, "frontier")
-            store.write_table(budget_state, final, "budget")
-            store.write_table(strat_state, final, "strategy")
-            _flush_journal()
-            store.commit(final, {"next_seq": next_seq})
-    _journal_pool.shutdown(wait=True)
+        # the terminal state is always durable
+        if batch - 1 > last_committed:
+            _commit(store, st, bg, batch - 1, snapshot=True)
     return CrawlRunResult(
-        store, final, batch_seconds,
-        policy.max_failed_pages, _default_cap,
-        out_hashes=acc,
+        store, batch - 1, batch_seconds, policy, out_hashes=None if stopped else acc
     )

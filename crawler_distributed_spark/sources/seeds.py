@@ -94,11 +94,11 @@ def take_pending_seeds(pending: DataFrame, capacity: int) -> DataFrame:
 def crawl_status_view(result, spark: SparkSession) -> DataFrame:
     """S10: per-crawl status rollup from the run's outputs: pages crawled,
     failures, last batch — job_status.py:117-360 as one aggregation."""
-    from ..plans.frontier_loop import _is_page
+    from ..plans.frontier_loop import is_page
 
     f = result._fetched(spark)
     return f.groupBy("crawl_id").agg(
-        F.sum(_is_page().cast("long")).alias("pages_crawled"),
+        F.sum(is_page().cast("long")).alias("pages_crawled"),
         F.sum((F.col("status") >= 400).cast("long")).alias("failures"),
         F.max("batch_id").alias("last_batch"),
         F.count("*").alias("requests"),

@@ -11,10 +11,14 @@ silently regress.
 """
 
 import os
+import threading
+
+import pytest
 
 from crawler_distributed_spark import synth
 from crawler_distributed_spark.plans.frontier_loop import run_crawl
 from crawler_distributed_spark.policy import CrawlPolicy
+from crawler_distributed_spark.storage import BatchStore
 
 CFG = synth.SynthConfig(n_hosts=3, pages_base=12, hot_factor=3, branching=4)
 SEEDS = synth.seed_rows(CFG, max_pages=8)
@@ -67,3 +71,26 @@ def test_scheduler_jobs_per_batch_bounded(spark, tmp_path):
     assert n_batches >= 3
     jobs_per_batch = len(ids) / n_batches
     assert jobs_per_batch <= 60, (len(ids), n_batches, jobs_per_batch)
+
+
+def _pool_threads() -> set:
+    return {t for t in threading.enumerate() if t.name.startswith("ThreadPoolExecutor")}
+
+
+def test_background_write_failure_raises_and_joins_pool(spark, tmp_path, monkeypatch):
+    """The journal write runs on the loop's background pool. When it fails,
+    run_crawl must raise that error, and no pool thread may outlive the
+    call."""
+    write_table = BatchStore.write_table
+
+    def failing_write(self, df, batch_id, table):
+        if table == "frontier_delta" and batch_id == 1:
+            raise OSError("injected journal write failure")
+        return write_table(self, df, batch_id, table)
+
+    monkeypatch.setattr(BatchStore, "write_table", failing_write)
+    robots = spark.createDataFrame(synth.robots_rule_rows(CFG))
+    before = _pool_threads()
+    with pytest.raises(OSError, match="injected journal write failure"):
+        run_crawl(spark, CFG, SEEDS, robots, str(tmp_path / "fail_ck"), CrawlPolicy())
+    assert _pool_threads() <= before

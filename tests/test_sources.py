@@ -1,10 +1,15 @@
-"""Sources + sitemap operators (S1-S3, S6, Q3, Q4)."""
+"""Sources + sitemap operators (S1-S3, S6, S10, S11, Q3, Q4)."""
 
+import os
 import textwrap
 
+import pytest
 from pyspark.sql import functions as F
 
+from crawler_distributed_spark import synth
 from crawler_distributed_spark.functions import sitemaps as SM
+from crawler_distributed_spark.plans.frontier_loop import run_crawl
+from crawler_distributed_spark.policy import CrawlPolicy
 from crawler_distributed_spark.sources import seeds as SRC
 
 SITEMAP_XML = textwrap.dedent(
@@ -126,3 +131,32 @@ def test_backpressure_capacity(spark):
     )
     took = SRC.take_pending_seeds(pending, 2).collect()
     assert [r.crawl_id for r in took] == ["c1", "c2"]
+
+
+def _small_crawl(spark, ck, **kw):
+    cfg = synth.SynthConfig(n_hosts=3, pages_base=12, hot_factor=3, branching=4)
+    robots = spark.createDataFrame(synth.robots_rule_rows(cfg))
+    return run_crawl(spark, cfg, synth.seed_rows(cfg, max_pages=8), robots, ck,
+                     CrawlPolicy(), **kw)
+
+
+def test_crawl_status_view(spark, tmp_path):
+    """S10: the status rollup agrees with the run's budget table and its
+    last batch."""
+    res = _small_crawl(spark, str(tmp_path / "ck"))
+    view = SRC.crawl_status_view(res, spark).collect()
+    assert {r.crawl_id: r.pages_crawled for r in view} == res.pages_dict(spark)
+    assert max(r.last_batch for r in view) == res.last_batch
+    assert all(r.requests >= r.pages_crawled + r.failures for r in view)
+
+
+def test_purge_crawl_data(spark, tmp_path):
+    """S11: purging removes the checkpoint dir, and a fresh (non-resume)
+    run on it is then accepted instead of refused as dirty."""
+    ck = str(tmp_path / "ck")
+    _small_crawl(spark, ck, stop_after_batch=0)
+    with pytest.raises(ValueError, match="already has state"):
+        _small_crawl(spark, ck)
+    SRC.purge_crawl_data(ck)
+    assert not os.path.exists(ck)
+    assert _small_crawl(spark, ck, stop_after_batch=0).last_batch == 0

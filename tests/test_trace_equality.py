@@ -213,6 +213,27 @@ def test_autothrottle_ttl_eviction(spark, tmp_path):
     assert all(eng.last_batch - r.last_b <= pol.autothrottle_ttl_batches for r in hl)
 
 
+def test_final_commit_writes_hostlat(spark, tmp_path):
+    """The terminal commit writes the same state tables as every durable
+    commit. With checkpoint_every=5 the run ends on a batch that is not a
+    multiple of 5; its hostlat table must exist and equal the one a
+    checkpoint_every=1 run leaves, so a resume keeps every EWMA."""
+    cfg = synth.SynthConfig(n_hosts=6, pages_base=30, hot_factor=2, branching=3)
+    seeds = synth.seed_rows(cfg, max_pages=20)
+    robots = spark.createDataFrame(synth.robots_rule_rows(cfg))
+
+    def final_hostlat(every):
+        pol = CrawlPolicy(autothrottle=True, quota_per_host=2, checkpoint_every=every)
+        res = run_crawl(spark, cfg, seeds, robots, str(tmp_path / f"ck{every}"), pol)
+        rows = res.store.read_table(spark, res.last_batch, "hostlat").collect()
+        return res.last_batch, sorted(tuple(r) for r in rows)
+
+    sparse_last, sparse_hl = final_hostlat(5)
+    assert sparse_last % 5 != 0
+    assert sparse_hl
+    assert (sparse_last, sparse_hl) == final_hostlat(1)
+
+
 def test_scale_paths_trace_equality(spark, tmp_path):
     """Force the at-scale physical path on the small corpus: the
     two-phase range-sort sequence assignment (seq_singlepart_threshold=0)
